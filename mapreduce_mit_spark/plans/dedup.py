@@ -712,14 +712,16 @@ def q77_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_bands_sql(materialized: bool = False) -> str:
+def _lsh_bands_sql() -> str:
     """q81's LSH banding as CTE text (sh/sig/bands) over the full corpus.
 
-    ``materialized=True`` pins each CTE with DuckDB's AS MATERIALIZED
-    hint — required by oracles that reference ``bands`` from several
-    consumers (the incremental stages), where default CTE inlining
-    re-evaluates the whole shingle→minhash pipeline per reference
-    (q163's chained oracle: 101 s → 1.3 s at sf0.001)."""
+    Every CTE is emitted ``AS MATERIALIZED``. The hint changes no
+    result; it stops DuckDB from inlining the CTE and re-evaluating the
+    whole shingle→minhash→band chain once per reference. Oracles
+    self-join ``bands`` (q148, q159, q167) or read it from several
+    stages (q163); inlined, they ran for minutes (sf0.001, 4 cores:
+    q148 232 s → 2.0 s, q163 101 s → 1.3 s). A single-reference
+    caller (q158) pays nothing for it."""
     # WHERE mh0 IS NOT NULL: shingle-less docs emit no bands (see
     # _lsh_bands_df — DuckDB concat() would otherwise hash their
     # all-NULL signatures to a shared md5('') bucket)
@@ -729,15 +731,14 @@ def _lsh_bands_sql(materialized: bool = False) -> str:
         f"FROM sig WHERE mh{b * BAND_SIZE} IS NOT NULL"
         for b in range(N_BANDS)
     )
-    mat = "MATERIALIZED " if materialized else ""
     return f"""
-    sh AS {mat}(
+    sh AS MATERIALIZED (
       SELECT doc_id, {shingles_sql()} AS shingles FROM documents
     ),
-    sig AS {mat}(
+    sig AS MATERIALIZED (
       SELECT doc_id, {", ".join(minhash_sql_exprs("shingles", N_HASHES))} FROM sh
     ),
-    bands AS {mat}(
+    bands AS MATERIALIZED (
       {bands_union}
     )"""
 
@@ -1571,7 +1572,7 @@ def _incr_stage_sql(
 
 
 INCR_DEDUP_ORACLE = f"""
-    WITH {_lsh_bands_sql(materialized=True)},
+    WITH {_lsh_bands_sql()},
     s0batch AS MATERIALIZED (SELECT doc_id FROM documents
                 WHERE doc_id % {INCR_BATCH_MOD} = {INCR_BATCH_REM}),
     s0corpus AS MATERIALIZED (SELECT doc_id FROM documents

@@ -513,7 +513,7 @@ def _q170_oracle() -> str:
       WHERE coalesce(p.n_shared, 0) * 10 <= coalesce(p.n_spans, 0) * 9
         AND quality.quality4 >= 5000
     ),
-    {_lsh_bands_sql(materialized=True)},
+    {_lsh_bands_sql()},
     cbands AS (
       SELECT * FROM bands WHERE doc_id IN (SELECT doc_id FROM curated)
     ),
@@ -799,7 +799,7 @@ def _q173_oracle() -> str:
         " FROM sized JOIN {src} USING (doc_id) GROUP BY lang"
     )
     return f"""
-    WITH RECURSIVE {_lsh_bands_sql(materialized=True)},
+    WITH RECURSIVE {_lsh_bands_sql()},
     sized AS MATERIALIZED (
       SELECT doc_id, lang, CAST(len({tokens_sql('text')}) AS BIGINT) AS n_tokens
       FROM documents

@@ -1587,7 +1587,7 @@ def _q163_oracle() -> str:
 
     k = token_seq_key_sql("text")
     return f"""
-    WITH {_lsh_bands_sql(materialized=True)},
+    WITH {_lsh_bands_sql()},
     s1batch AS MATERIALIZED (
       SELECT doc_id FROM documents WHERE doc_id % 10 = {ADMIT_REM_1}),
     s1corpus AS MATERIALIZED (

@@ -1,8 +1,10 @@
 """Documentation staleness gates.
 
 The README's generated query-catalog map must match the live registry —
-a new @register, a moved function, or a deleted query must fail here
-until `python tools/gen_opmap.py --write` is re-run.
+a new, deleted or renamed query, one moved to another file, or changed
+tags, family or oracle kind must fail here until
+`python tools/gen_opmap.py --write` is re-run. Rows name each query's
+`path::function_name`, so edits that only shift line numbers do not.
 """
 
 import os

@@ -119,6 +119,9 @@ def approx_equal(a: list[tuple], b: list[tuple]) -> tuple[bool, str]:
 
 
 def main() -> int:
+    # one line per finished query reaches a piped reader at once, so a
+    # caller that kills the sweep on a timeout still sees how far it got
+    sys.stdout.reconfigure(line_buffering=True)
     argv = sys.argv[1:]
     bare = "--bare" in argv
     types = "--types" in argv
