@@ -25,11 +25,12 @@ path for the same computation.
 
 from __future__ import annotations
 
-import os
 import re
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.io import corpus_rdd
 
 KeyValue = tuple[str, str]
 MapFn = Callable[[str, str], Iterable[KeyValue]]
@@ -58,10 +59,8 @@ def run_job(
     honored by Spark's HashPartitioner.
     """
     paths = ",".join(input_paths) if isinstance(input_paths, list) else input_paths
-    sc = spark.sparkContext
     kvs = (
-        sc.wholeTextFiles(paths)
-        .map(lambda kv: (os.path.basename(kv[0]), kv[1]))
+        corpus_rdd(spark, paths)
         .flatMap(lambda kv: map_fn(kv[0], kv[1]))
         .groupByKey(numPartitions=max(n_reduce, 1))
         .map(lambda kv: (kv[0], reduce_fn(kv[0], list(kv[1]))))

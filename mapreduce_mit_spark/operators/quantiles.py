@@ -333,7 +333,13 @@ def global_running_sum(
     semantics (``rows unbounded preceding .. current row``), matching
     ``SUM(v) OVER (ORDER BY ...)`` with a total order. ``order_cols``
     must be a total order (tiebreaker included) or the running value
-    at ties is placement-dependent."""
+    at ties is placement-dependent.
+
+    NULL values follow SUM's rule: a row's total is NULL only while no
+    non-NULL value precedes it (inclusive) in the GLOBAL order. The
+    non-NULL counts ride along with the sums, so a range partition that
+    starts with NULLs still carries the prefix of the partitions before
+    it."""
     P = _resolve_partitions(df, partitions)
     cols = [F.col(c).asc_nulls_last() for c in order_cols]
     d = df.repartitionByRange(P, *cols).withColumn(
@@ -344,12 +350,26 @@ def global_running_sum(
         .orderBy(*cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = d.withColumn("_lsum", F.sum(value_col).over(wl))
-    cnt = local.groupBy("_pid").agg(F.sum(value_col).alias("_s"))
+    local = d.withColumn("_lsum", F.sum(value_col).over(wl)).withColumn(
+        "_lcnt", F.count(value_col).over(wl)
+    )
+    cnt = local.groupBy("_pid").agg(
+        F.sum(value_col).alias("_s"), F.count(value_col).alias("_c")
+    )
     wp = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    pre = cnt.withColumn("_prefix", F.coalesce(F.sum("_s").over(wp), F.lit(0)))
+    pre = cnt.select(
+        "_pid",
+        F.coalesce(F.sum("_s").over(wp), F.lit(0)).alias("_prefix"),
+        F.coalesce(F.sum("_c").over(wp), F.lit(0)).alias("_pcnt"),
+    )
     return (
-        local.join(F.broadcast(pre.select("_pid", "_prefix")), "_pid")
-        .withColumn(alias, F.col("_lsum") + F.col("_prefix"))
-        .drop("_pid", "_lsum", "_prefix")
+        local.join(F.broadcast(pre), "_pid")
+        .withColumn(
+            alias,
+            F.when(
+                F.col("_lcnt") + F.col("_pcnt") > 0,
+                F.coalesce("_lsum", F.lit(0)) + F.col("_prefix"),
+            ),
+        )
+        .drop("_pid", "_lsum", "_lcnt", "_prefix", "_pcnt")
     )

@@ -67,36 +67,65 @@ EMB_VALID_SQL = (
 
 def valid_embeddings(e: DataFrame) -> DataFrame:
     """The Spark half of the ingestion gate (see EMB_VALID_SQL)."""
-    xd = lambda x: x.cast("double")  # noqa: E731
-    finite = lambda x: (  # noqa: E731
-        x.isNotNull()
-        & ~F.isnan(xd(x))
-        & (F.abs(xd(x)) != F.lit(float("inf")))
+    finite = (
+        "x IS NOT NULL AND NOT isnan(CAST(x AS DOUBLE)) "
+        f"AND abs(CAST(x AS DOUBLE)) != {_INF}"
     )
-    bad = F.aggregate(
-        F.transform(
-            "embedding", lambda x: F.when(finite(x), 0).otherwise(1)
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
+    return e.where(F.expr(
+        f"embedding IS NOT NULL AND size(embedding) = {DIM} AND aggregate("
+        f"transform(embedding, x -> CASE WHEN {finite} THEN 0 ELSE 1 END), "
+        "0, (acc, x) -> acc + x) = 0"
+    ))
+
+
+# ---- vector math as Spark-SQL text ---------------------------------------
+# Every vector expression is ONE Spark-SQL string: the helpers below
+# take column names or SQL fragments and return text, and each consumer
+# parses its whole expression with a single ``F.expr`` — one py4j call,
+# where the Column API paid ~8 ms and dozens of gateway round trips per
+# higher-order lambda (pyspark's ``_create_lambda``; see
+# :func:`_plane_dot_expr`). The text resolves to the Catalyst
+# expressions the Column form built: elements CAST to double, a
+# sequential ``aggregate`` fold from a ``0.0D`` seed, so values stay
+# bit-identical to the DuckDB twins after rounding. Lambda variables
+# shadow columns of the same name, so a fragment that names a column
+# is only ever an ARGUMENT of a higher-order function, never spliced
+# into a lambda body that binds that name.
+_INF = "CAST('Infinity' AS DOUBLE)"
+
+
+def _fsum(arr: str) -> str:
+    """Sequential left fold of an array<double>, seeded 0.0D."""
+    return f"aggregate({arr}, 0.0D, (acc, x) -> acc + x)"
+
+
+def _dbl(a: str) -> str:
+    return f"transform({a}, x -> CAST(x AS DOUBLE))"
+
+
+def _dot(a: str, b: str) -> str:
+    """Sequential-order dot product of two array<float> fragments,
+    double accumulation (matches DuckDB list_aggregate('sum') order)."""
+    return _fsum(
+        f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
     )
-    return e.where(
-        F.col("embedding").isNotNull()
-        & (F.size("embedding") == DIM)
-        & (bad == 0)
-    )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential-order dot product of two array<float> columns, double
-    accumulation (matches DuckDB list_aggregate('sum') ordering)."""
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+def _norm(a: str) -> str:
+    return f"sqrt({_fsum(f'transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))')})"
 
 
-def _norm(a: Column) -> Column:
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
+def _cos(a: str, b: str, na: str | None = None, nb: str | None = None) -> str:
+    """Cosine of two vector fragments; ``na``/``nb`` name precomputed
+    norms (q164's norms-once discipline — the quotient is bit-equal to
+    the per-pair form)."""
+    return f"({_dot(a, b)} / nullif({na or _norm(a)} * {nb or _norm(b)}, 0.0D))"
+
+
+def _neg_cos(a: str, b: str, na: str | None = None, nb: str | None = None) -> str:
+    """Negated cosine as an ascending sort key: NULL (zero norm) → +inf,
+    so a null-sim cell ranks LAST, as the oracle's NULLS LAST does."""
+    return f"coalesce(-{_cos(a, b, na, nb)}, {_INF})"
 
 
 _DOT_SQL = (
@@ -122,8 +151,9 @@ def cosine_sql(a: str, b: str) -> str:
     )
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return _dot(a, b) / F.nullif(_norm(a) * _norm(b), F.lit(0.0))
+def cosine_col(a: str, b: str) -> Column:
+    """Spark twin of :func:`cosine_sql` over two column names."""
+    return F.expr(_cos(a, b))
 
 
 @register(
@@ -148,7 +178,7 @@ def q85_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of the embedding table."""
     e = t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(F.col("embedding").alias("qv"))
-    sim = cosine_col(F.col("embedding"), F.col("qv"))
+    sim = cosine_col("embedding", "qv")
     return (
         e.where(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(q))
@@ -185,14 +215,15 @@ def _table_planes(tid: int) -> list[list[float]]:
 
 def _plane_dot_expr(emb_sql: str, plane: list[float]) -> str:
     """The per-plane dot as ONE Spark-SQL string: sequential-fold sum,
-    double accumulation — textually the same lambda pipeline the
-    Column path builds, parsed JVM-side in one py4j call instead of
+    double accumulation, parsed JVM-side in one py4j call instead of
     hundreds (pyspark's ``lit(list)`` lits every ELEMENT and each
     higher-order lambda costs several gateway round-trips; measured
     10 s → 0.05 s to construct the 6-table key projection, identical
     values — the q172 serve wall was driver-side plan CONSTRUCTION,
-    not execution). ``{v!r}D`` literals: repr round-trips the exact
-    double, the D suffix keeps Spark from parsing DECIMAL."""
+    not execution). The precedent the whole SQL-text vector layer
+    (:func:`_dot` and friends) generalizes. ``{v!r}D`` literals: repr
+    round-trips the exact double, the D suffix keeps Spark from
+    parsing DECIMAL."""
     lits = ", ".join(f"{v!r}D" for v in plane)
     return (
         f"aggregate(zip_with({emb_sql}, array({lits}), "
@@ -201,34 +232,18 @@ def _plane_dot_expr(emb_sql: str, plane: list[float]) -> str:
 
 
 def _bucket_col(
-    emb: Column | str,
+    emb: str,
     n_planes: int = N_PLANES,
     planes: list[list[float]] | None = None,
 ) -> Column:
-    """Sign-LSH bucket id: bit h = (embedding · plane_h) >= 0.
-
-    ``emb`` may be a Column (arbitrary expression) or a COLUMN NAME
-    string — the string form builds each plane's dot as one parsed
-    expr (see :func:`_plane_dot_expr`) and is what the hot multi-table
-    paths use. Both forms are value-identical (hash-checked on the
-    full fixture)."""
-    if isinstance(emb, str):
-        terms = []
-        for h, plane in enumerate((planes or _PLANES)[:n_planes]):
-            dot = _plane_dot_expr(emb, plane)
-            terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << h} ELSE 0 END)")
-        return F.expr("CAST(" + " + ".join(terms) + " AS BIGINT)")
-    acc = None
+    """Sign-LSH bucket id of the embedding column named ``emb``:
+    bit h = (embedding · plane_h) >= 0, each plane's dot one parsed
+    :func:`_plane_dot_expr`."""
+    terms = []
     for h, plane in enumerate((planes or _PLANES)[:n_planes]):
-        w = F.lit([float(v) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(emb, w, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        term = F.when(dot >= 0, F.lit(1 << h)).otherwise(F.lit(0))
-        acc = term if acc is None else acc + term
-    return acc.cast("long")
+        dot = _plane_dot_expr(emb, plane)
+        terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << h} ELSE 0 END)")
+    return F.expr("CAST(" + " + ".join(terms) + " AS BIGINT)")
 
 
 def _bucket_sql(
@@ -249,7 +264,7 @@ BLOCK_CAP = 128  # rows per block before the quadratic is sub-bucketed
 N_SUB_PLANES = 2  # 4 sub-buckets — quarters an oversized block
 
 
-def capped_sub_col(n, emb, cap: int, n_planes: int = N_SUB_PLANES):
+def capped_sub_col(n: str, emb: str, cap: int, n_planes: int = N_SUB_PLANES):
     """Bounded-blocking refinement shared by q86/q88's label blocks
     and q164's IVF cells: keys whose population ``n`` exceeds ``cap``
     refine with an ``n_planes`` sign-LSH sub-bucket; at or below the
@@ -257,7 +272,7 @@ def capped_sub_col(n, emb, cap: int, n_planes: int = N_SUB_PLANES):
     (plus its SQL twin below) so the blocking semantics can never
     drift between consumers."""
     return (
-        F.when(n > cap, _bucket_col(emb, n_planes))
+        F.when(F.col(n) > cap, _bucket_col(emb, n_planes))
         .otherwise(F.lit(0))
         .cast("long")
     )
@@ -294,9 +309,9 @@ def blocked_embeddings(e: DataFrame) -> DataFrame:
     return (
         e.join(F.broadcast(counts), "label")
         .withColumn(
-            "sub", capped_sub_col(F.col("_n"), F.col("embedding"), BLOCK_CAP)
+            "sub", capped_sub_col("_n", "embedding", BLOCK_CAP)
         )
-        .withColumn("nrm", _norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(_norm("embedding")))
         .drop("_n")
     )
 
@@ -346,9 +361,7 @@ def q86_nn_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked = blocked_embeddings(e)
     a = blocked.where(F.col("vec_id") < 100).alias("a")
     b = blocked.alias("b")
-    sim = _dot(F.col("a.embedding"), F.col("b.embedding")) / F.nullif(
-        F.col("a.nrm") * F.col("b.nrm"), F.lit(0.0)
-    )
+    sim = F.expr(_cos("a.embedding", "b.embedding", "a.nrm", "b.nrm"))
     pairs = a.join(
         b,
         (F.col("a.label") == F.col("b.label"))
@@ -389,7 +402,7 @@ def q87_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall). Bucket population balance is what this query inspects."""
     e = t(spark, sf_dir, "embeddings")
     return (
-        e.select(_bucket_col(F.col("embedding")).alias("bucket"), "vec_id")
+        e.select(_bucket_col("embedding").alias("bucket"), "vec_id")
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vectors"), F.min("vec_id").alias("min_vec_id"))
         .orderBy("bucket")
@@ -420,9 +433,7 @@ def q88_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
     blocked = blocked_embeddings(e)
     a, b = blocked.alias("a"), blocked.alias("b")
-    sim = _dot(F.col("a.embedding"), F.col("b.embedding")) / F.nullif(
-        F.col("a.nrm") * F.col("b.nrm"), F.lit(0.0)
-    )
+    sim = F.expr(_cos("a.embedding", "b.embedding", "a.nrm", "b.nrm"))
     return (
         a.join(
             b,
@@ -522,7 +533,7 @@ def q89_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4 planes -> 16 coarse buckets: the probe set stays large enough to
     # rank meaningfully at test SFs; production tunes planes to data size.
     b = e.select(
-        "vec_id", "label", "embedding", _bucket_col(F.col("embedding"), 4).alias("bucket")
+        "vec_id", "label", "embedding", _bucket_col("embedding", 4).alias("bucket")
     )
     q = (
         b.where(F.col("vec_id") == QUERY_VEC_ID)
@@ -534,7 +545,7 @@ def q89_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(*[F.col("qbucket").bitwiseXOR(F.lit(v)) for v in _PROBE_XORS])
         ).alias("pbucket"),
     )
-    sim = cosine_col(F.col("embedding"), F.col("qv"))
+    sim = cosine_col("embedding", "qv")
     hits = (
         b.where(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(probes), F.col("bucket") == F.col("pbucket"))
@@ -594,16 +605,10 @@ def exact_topk_per_query(
     # is NULLS LAST — without the suffix the dirty rows occupy the
     # exact top-k in one engine only and every recall audit diverges
     if metric == "cosine":
-        score = cosine_col(F.col("embedding"), F.col("qv"))
+        score = cosine_col("embedding", "qv")
         order = F.col("_es").desc_nulls_last()
     elif metric == "l2":
-        ev = F.transform("embedding", lambda x: x.cast("double"))
-        qd = F.transform("qv", lambda x: x.cast("double"))
-        score = F.aggregate(
-            F.zip_with(ev, qd, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        score = F.expr(_l2(_dbl("embedding"), _dbl("qv")))
         order = F.col("_es").asc_nulls_last()
     else:
         raise ValueError(f"unknown metric: {metric!r}")
@@ -637,13 +642,17 @@ def _mark_exact_topk(
 
 def _with_recall(marked: DataFrame, k: int, target: float) -> DataFrame:
     """Attach each query's recall@k column (hit-count / k, exact in
-    both engines) and its contract bit, preserving score order."""
-    rec = marked.groupBy("query_id").agg(
-        (F.sum(F.col("in_exact_topk").cast("long")).cast("double") / F.lit(float(k)))
-        .alias("recall_at_k")
+    both engines) and its contract bit, preserving score order.
+
+    One window pass: the hit count is ``sum(...) OVER (PARTITION BY
+    query_id)`` on the marked rows themselves. A groupBy joined back
+    onto ``marked`` plans and runs the marked subtree (the ANN probe
+    and the exact-scan audit) twice, plus the broadcast's own jobs."""
+    hits = F.sum(F.col("in_exact_topk").cast("long")).over(
+        Window.partitionBy("query_id")
     )
     return (
-        marked.join(F.broadcast(rec), "query_id")
+        marked.withColumn("recall_at_k", hits.cast("double") / F.lit(float(k)))
         .withColumn("recall_ok", F.col("recall_at_k") >= target)
         .orderBy(F.col("_sim").desc(), "vec_id")
     )
@@ -682,8 +691,8 @@ def recall_audit(
 
 
 def _margin_probes_col(
-    qv,
-    qbucket,
+    qv: str,
+    qbucket: str,
     n_planes: int = 4,
     top_m: int | None = None,
     planes: list[list[float]] | None = None,
@@ -706,30 +715,23 @@ def _margin_probes_col(
     exponentially finer partition with no confidence ordering. Pure
     column expression (the planes are literals), deterministic per
     query; |margin| ties break by plane mask ascending (struct sort is
-    lexicographic), identically replayable in SQL."""
+    lexicographic), identically replayable in SQL. ``qv``/``qbucket``
+    name the query-vector and bucket columns; the whole probe array is
+    one parsed expression."""
     if top_m is None:
         top_m = min(n_planes, 4)
     if not 1 <= top_m <= n_planes:
         raise ValueError(f"top_m must be in [1, {n_planes}], got {top_m}")
-    margins = []
-    for h, plane in enumerate((planes or _PLANES)[:n_planes]):
-        if isinstance(qv, str):
-            dot = F.expr(_plane_dot_expr(qv, plane))  # see _bucket_col
-        else:
-            w = F.lit([float(v) for v in plane])
-            dot = F.aggregate(
-                F.zip_with(qv, w, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        margins.append(
-            F.struct(F.abs(dot).alias("m"), F.lit(1 << h).alias("mask"))
-        )
-    ranked = F.array_sort(F.array(*margins))  # ascending |margin|, ties by mask
-    probes = [qbucket] + [
-        qbucket.bitwiseXOR(ranked[i]["mask"]) for i in range(top_m)
-    ] + [qbucket.bitwiseXOR(ranked[0]["mask"]).bitwiseXOR(ranked[1]["mask"])]
-    return F.array_distinct(F.array(*probes))
+    margins = ", ".join(
+        f"named_struct('m', abs({_plane_dot_expr(qv, plane)}), 'mask', {1 << h})"
+        for h, plane in enumerate((planes or _PLANES)[:n_planes])
+    )
+    ranked = f"array_sort(array({margins}))"  # ascending |margin|, ties by mask
+    flips = "".join(f", {qbucket} ^ {ranked}[{i}].mask" for i in range(top_m))
+    return F.expr(
+        f"array_distinct(array({qbucket}{flips}, "
+        f"{qbucket} ^ {ranked}[0].mask ^ {ranked}[1].mask))"
+    )
 
 
 def lsh_probe_hits(
@@ -768,20 +770,16 @@ def lsh_probe_hits(
     plist = (
         F.array(*[F.col("qbucket").bitwiseXOR(F.lit(v)) for v in probe_xors])
         if probe_xors is not None
-        else _margin_probes_col(
-            "qv", F.col("qbucket"), n_planes=n_planes, top_m=top_m
-        )
+        else _margin_probes_col("qv", "qbucket", n_planes=n_planes, top_m=top_m)
     )
-    probes = queries.withColumn("_qn", _norm(F.col("qv"))).select(
+    probes = queries.withColumn("_qn", F.expr(_norm("qv"))).select(
         "query_id",
         "qv",
         "_qn",
         F.explode(plist).alias("pbucket"),
     )
-    bn = b.withColumn("_bn", _norm(F.col("embedding")))
-    sim = _dot(F.col("embedding"), F.col("qv")) / F.nullif(
-        F.col("_bn") * F.col("_qn"), F.lit(0.0)
-    )
+    bn = b.withColumn("_bn", F.expr(_norm("embedding")))
+    sim = F.expr(_cos("embedding", "qv", "_bn", "_qn"))
     w = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), "vec_id")
     return (
         bn.join(F.broadcast(probes), F.col("bucket") == F.col("pbucket"))
@@ -1161,14 +1159,12 @@ def lsh_multitable_hits(
         .select("query_id", "vec_id")
         .distinct()
     )
-    qn = queries.withColumn("_qn", _norm(F.col("qv")))
+    qn = queries.withColumn("_qn", F.expr(_norm("qv")))
     build_qn = F.broadcast(qn) if will_broadcast else qn.hint("shuffle_hash")
-    sim = _dot(F.col("embedding"), F.col("qv")) / F.nullif(
-        F.col("_bn") * F.col("_qn"), F.lit(0.0)
-    )
+    sim = F.expr(_cos("embedding", "qv", "_bn", "_qn"))
     w = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), "vec_id")
     return (
-        cand.join(e.withColumn("_bn", _norm(F.col("embedding"))), "vec_id")
+        cand.join(e.withColumn("_bn", F.expr(_norm("embedding"))), "vec_id")
         .join(build_qn, "query_id")
         .select("query_id", "vec_id", sim.alias("_sim"))
         .withColumn("_rk", F.row_number().over(w))
@@ -1394,7 +1390,7 @@ def ivf_codebook(
     init = (
         e.select(
             "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
+            F.expr(_dbl("embedding")).alias("cv"),
             F.md5(
                 F.concat(F.lit("ivf:"), F.col("vec_id").cast("string"))
             ).alias("_ord"),
@@ -1412,7 +1408,7 @@ def ivf_codebook(
     # each round's assignment divides the precomputed norm instead of
     # re-evaluating sqrt(Σx²) per (vector, centroid) pair × iters —
     # the quotient is bit-equal to the oracle's per-pair cosine
-    ev = e.withColumn("_en", _norm(F.col("embedding")))
+    ev = e.withColumn("_en", F.expr(_norm("embedding")))
     for _ in range(iters):
         # in-row argmax (r17): the k-row codebook collapses to ONE
         # broadcast row of (cid, cv, _cn) structs; each vector ranks
@@ -1422,31 +1418,10 @@ def ivf_codebook(
         # form hash-exchanged every corpus row (with its embedding)
         # once per iteration. Sentinel/tie semantics identical to
         # _assign_to_codebook (and the oracle's row_number replay):
-        # NULL sim → +inf → last, ties → lowest cid.
-        centn = cent.select("cid", "cv", _norm(F.col("cv")).alias("_cn"))
-        cells = centn.select(
-            F.struct("cid", "cv", "_cn").alias("_c")
-        ).agg(F.collect_list("_c").alias("_cells"))
-
-        def _neg_sim(c):
-            s = _dot(F.col("embedding"), c["cv"]) / F.nullif(
-                F.col("_en") * c["_cn"], F.lit(0.0)
-            )
-            return F.coalesce(-s, F.lit(float("inf")))
-
-        # O(k) running argmin (r18, :func:`_inrow_min`) — same
-        # (key, cid) order as the r17 sort_array head, no per-row
-        # k log k sort at the cell policy's scaled k
-        best = _inrow_min(
-            F.transform(
-                "_cells",
-                lambda c: F.struct(
-                    _neg_sim(c).alias("_k"), c["cid"].alias("cid")
-                ),
-            )
-        )["cid"]
-        assign = ev.crossJoin(F.broadcast(cells)).select(
-            best.alias("cluster"), "embedding"
+        # NULL sim → +inf → last, ties → lowest cid. O(k) running
+        # argmin (r18, :func:`_inrow_min`), no per-row k log k sort.
+        assign = ev.crossJoin(F.broadcast(_ivf_cells_row(cent))).select(
+            _cells_argmin("embedding", "_en").alias("cluster"), "embedding"
         )
         # element-wise means via posexplode + narrow agg, NOT DIM avg
         # aggregate expressions: the values are identical (same rows,
@@ -1458,18 +1433,14 @@ def ivf_codebook(
         # the array in pos order.
         ex = assign.select(
             "cluster",
-            F.posexplode(
-                F.transform("embedding", lambda x: x.cast("double"))
-            ).alias("pos", "v"),
+            F.posexplode(F.expr(_dbl("embedding"))).alias("pos", "v"),
         )
         per_elem = ex.groupBy("cluster", "pos").agg(
             F.round(F.avg("v"), 6).alias("m")
         )
         means = per_elem.groupBy("cluster").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.m,
-            ).alias("cv_new")
+            F.expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)")
+            .alias("cv_new")
         )
         # means is <= k rows by construction (one per cluster), but its
         # plan-time size estimate is a full-table aggregate's (unknown →
@@ -1520,7 +1491,7 @@ def codebook_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def _inrow_min(keyed: Column) -> Column:
+def _inrow_min(keyed: str) -> str:
     """O(k) running minimum over an array of ``struct<_k double,
     cid bigint>`` — bit-identical to
     ``element_at(sort_array(keyed), 1)`` (structs compare
@@ -1536,14 +1507,30 @@ def _inrow_min(keyed: Column) -> Column:
     head). Callers must make ``_k`` non-NULL (the +inf sentinel
     discipline) — a NULL key would make the struct comparison NULL
     and freeze the fold on the accumulator."""
-    return F.aggregate(
-        keyed,
-        F.struct(
-            F.lit(float("inf")).alias("_k"),
-            F.lit(2**62).cast("long").alias("cid"),
-        ),
-        lambda acc, c: F.when(c < acc, c).otherwise(acc),
+    return (
+        f"aggregate({keyed}, named_struct('_k', {_INF}, 'cid', {2**62}L), "
+        "(acc, c) -> CASE WHEN c < acc THEN c ELSE acc END)"
     )
+
+
+def _ivf_cells_row(cent: DataFrame) -> DataFrame:
+    """A (cid, cv) codebook collapsed to ONE broadcastable row: the
+    ``_cells`` array of (cid, cv, _cn) structs every in-row IVF
+    assignment and probe ranking reads."""
+    return cent.select(
+        F.struct("cid", "cv", F.expr(_norm("cv")).alias("_cn")).alias("_c")
+    ).agg(F.collect_list("_c").alias("_cells"))
+
+
+def _cells_argmin(vec: str, vnorm: str) -> Column:
+    """cid of the max-cosine cell of vector column ``vec`` (norm column
+    ``vnorm``) among the in-scope ``_cells`` (:func:`_ivf_cells_row`):
+    NULL sim → +inf → last, ties → lowest cid."""
+    keyed = (
+        f"transform(_cells, c -> named_struct("
+        f"'_k', {_neg_cos(vec, 'c.cv', vnorm, 'c._cn')}, 'cid', c.cid))"
+    )
+    return F.expr(f"{_inrow_min(keyed)}.cid")
 
 
 def _assign_to_codebook(part: DataFrame, centn: DataFrame) -> DataFrame:
@@ -1575,30 +1562,18 @@ def _assign_to_codebook(part: DataFrame, centn: DataFrame) -> DataFrame:
     cells = centn.select(
         F.struct("cid", "cv", "_cn").alias("_c")
     ).agg(F.collect_list("_c").alias("_cells"))
-
-    def _neg_sim(c):
-        s = _dot(F.col("embedding"), c["cv"]) / F.nullif(
-            F.col("_en") * c["_cn"], F.lit(0.0)
-        )
-        return F.coalesce(-s, F.lit(float("inf")))
-
-    best = _inrow_min(
-        F.transform(
-            "_cells",
-            lambda c: F.struct(
-                _neg_sim(c).alias("_k"), c["cid"].alias("cid")
-            ),
-        )
-    )["cid"]
     return (
-        part.withColumn("_en", _norm(F.col("embedding")))
+        part.withColumn("_en", F.expr(_norm("embedding")))
         .crossJoin(F.broadcast(cells))
-        .select("vec_id", "label", best.alias("cluster"), "embedding")
+        .select(
+            "vec_id", "label", _cells_argmin("embedding", "_en").alias("cluster"),
+            "embedding",
+        )
     )
 
 
 def _with_cnorm(cent: DataFrame) -> DataFrame:
-    return cent.select("cid", "cv", _norm(F.col("cv")).alias("_cn"))
+    return cent.select("cid", "cv", F.expr(_norm("cv")).alias("_cn"))
 
 
 def _ivf_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -1774,13 +1749,13 @@ def q68_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = (
         e.where(F.col("vec_id") == QUERY_VEC_ID)
         .crossJoin(F.broadcast(cent))
-        .select("cid", cosine_col(F.col("embedding"), F.col("cv")).alias("sim"))
+        .select("cid", cosine_col("embedding", "cv").alias("sim"))
         .orderBy(F.col("sim").desc(), "cid")
         .limit(N_PROBE)
         .select("cid")
     )
     q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(F.col("embedding").alias("qv"))
-    qsim = cosine_col(F.col("embedding"), F.col("qv"))
+    qsim = cosine_col("embedding", "qv")
     hits = (
         assign.join(F.broadcast(probe), assign.cluster == F.col("cid"))
         .where(F.col("vec_id") != QUERY_VEC_ID)
@@ -1818,29 +1793,10 @@ def ivf_probe_hits(
     (|queries| × nprobe)-row probe set; the corpus never shuffles."""
     # in-row argmax assignment (r17) — the _assign_to_codebook
     # discipline minus the label column: pure map pass, no exchange
-    centn = cent.select("cid", "cv", _norm(F.col("cv")).alias("_cn"))
-    cells = centn.select(
-        F.struct("cid", "cv", "_cn").alias("_c")
-    ).agg(F.collect_list("_c").alias("_cells"))
-
-    def _neg_sim(c):
-        s = _dot(F.col("embedding"), c["cv"]) / F.nullif(
-            F.col("_en") * c["_cn"], F.lit(0.0)
-        )
-        return F.coalesce(-s, F.lit(float("inf")))
-
-    best = _inrow_min(
-        F.transform(
-            "_cells",
-            lambda c: F.struct(
-                _neg_sim(c).alias("_k"), c["cid"].alias("cid")
-            ),
-        )
-    )["cid"]
     assign = (
-        e.withColumn("_en", _norm(F.col("embedding")))
-        .crossJoin(F.broadcast(cells))
-        .select("vec_id", best.alias("cluster"), "embedding")
+        e.withColumn("_en", F.expr(_norm("embedding")))
+        .crossJoin(F.broadcast(_ivf_cells_row(cent)))
+        .select("vec_id", _cells_argmin("embedding", "_en").alias("cluster"), "embedding")
     )
     return ivf_serve_hits(assign, cent, queries, k, nprobe)
 
@@ -1882,51 +1838,28 @@ def ivf_serve_hits(
     SET stays bit-identical to the oracle's row_number replay. The
     collapsed codebook row is ~0.5 KB × k (34 MB at the k=2¹⁶ policy
     cap — inside the 64 MB broadcast threshold)."""
-    qn = queries.withColumn("_qn", _norm(F.col("qv")))
-    cells = cent.select(
-        F.struct("cid", "cv", _norm(F.col("cv")).alias("_cn")).alias("_c")
-    ).agg(F.collect_list("_c").alias("_cells"))
-
-    def _neg_qsim(c):
-        # same cosine arithmetic as cosine_col (dot / (qn*cn), nullif
-        # zero-norm), negated for the ascending struct sort; NULL →
-        # +inf so null-sim cells rank LAST, as the window's default
-        # NULLS LAST did
-        s = _dot(F.col("qv"), c["cv"]) / F.nullif(
-            F.col("_qn") * c["_cn"], F.lit(0.0)
-        )
-        return F.coalesce(-s, F.lit(float("inf")))
-
+    qn = queries.withColumn("_qn", F.expr(_norm("qv")))
+    # the cosine arithmetic of cosine_col, negated for the ascending
+    # struct sort (:func:`_neg_cos` — null-sim cells rank LAST, as the
+    # window's default NULLS LAST did)
+    ranked = (
+        f"sort_array(transform(_cells, c -> named_struct("
+        f"'_nq', {_neg_cos('qv', 'c.cv', '_qn', 'c._cn')}, 'cid', c.cid)))"
+    )
     probe = (
-        qn.crossJoin(F.broadcast(cells))
+        qn.crossJoin(F.broadcast(_ivf_cells_row(cent)))
         .select(
             "query_id",
             "qv",
             "_qn",
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        F.transform(
-                            "_cells",
-                            lambda c: F.struct(
-                                _neg_qsim(c).alias("_nq"),
-                                c["cid"].alias("cid"),
-                            ),
-                        )
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("_p"),
+            F.expr(f"explode(slice({ranked}, 1, {nprobe}))").alias("_p"),
         )
         .select("query_id", "qv", F.col("_p.cid").alias("cid"), "_qn")
     )
     lists = assign.select(
-        "vec_id", "cluster", "embedding", _norm(F.col("embedding")).alias("_bn")
+        "vec_id", "cluster", "embedding", F.expr(_norm("embedding")).alias("_bn")
     )
-    sim = _dot(F.col("embedding"), F.col("qv")) / F.nullif(
-        F.col("_bn") * F.col("_qn"), F.lit(0.0)
-    )
+    sim = F.expr(_cos("embedding", "qv", "_bn", "_qn"))
     w = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), "vec_id")
     ranked = (
         lists.join(F.broadcast(probe), lists.cluster == F.col("cid"))
@@ -1978,19 +1911,19 @@ def q155_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the cell assignment comes from the memoized inverted
     lists (ivf_index_for — one broadcast-codebook argmax per source
-    fingerprint, embeddings never shuffle); the stats are two 1-row
-    broadcast aggregates over the 8-row cell table — no driver
+    fingerprint, embeddings never shuffle); the total and the largest
+    cell are ``sum``/``max OVER ()`` over the k-row cell table — one
+    window pass, no 1-row aggregates cross-joined back (each was
+    another plan of the cell table and its own jobs), no eager
     count."""
     _cent, assign = ivf_index_for(spark, sf_dir)
+    whole = Window.partitionBy()
     cells = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_vectors"))
-    tot = cells.agg(F.sum("n_vectors").alias("n"))
-    mx = cells.agg(F.max("n_vectors").alias("mx"))
-    frac = F.col("n_vectors").cast("double") / F.col("n")
-    max_frac = F.col("mx").cast("double") / F.col("n")
+    n = F.sum("n_vectors").over(whole)
+    frac = F.col("n_vectors").cast("double") / n
+    max_frac = F.max("n_vectors").over(whole).cast("double") / n
     return (
-        cells.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(mx))
-        .select(
+        cells.select(
             "cluster",
             "n_vectors",
             F.round(frac, 4).alias("frac"),
@@ -2044,17 +1977,15 @@ def q147_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     eval_set = e.where(is_eval).select(
         F.col("vec_id").alias("eval_id"),
         F.col("embedding").alias("ev"),
-        _norm(F.col("embedding")).alias("_en"),
+        F.expr(_norm("embedding")).alias("_en"),
     )
     # norms once per side (q164's discipline): train-side norm per row,
     # eval-side norm inside the broadcast — per (train, eval) pair only
     # the dot product remains; quotient bit-equal to the per-pair form
-    cs = _dot(F.col("embedding"), F.col("ev")) / F.nullif(
-        F.col("_tn") * F.col("_en"), F.lit(0.0)
-    )
+    cs = F.expr(_cos("embedding", "ev", "_tn", "_en"))
     return (
         e.where(~is_eval)
-        .withColumn("_tn", _norm(F.col("embedding")))
+        .withColumn("_tn", F.expr(_norm("embedding")))
         .crossJoin(F.broadcast(eval_set))
         .select("vec_id", cs.alias("cs"))
         .groupBy("vec_id")
@@ -2084,11 +2015,10 @@ PQ_SHORTLIST = 100  # ADC shortlist size; exact rerank runs on these only
 Q157_RECALL_TARGET = 0.6  # measured >= 0.8 across SFs; floor w/ margin
 
 
-def _l2_col(a: Column, b: Column) -> Column:
-    """Sequential-order squared-L2 distance of two array<double> cols
-    (same accumulation order as the DuckDB twin)."""
-    d = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x)
+def _l2(a: str, b: str) -> str:
+    """Sequential-order squared-L2 distance of two array<double>
+    fragments (same accumulation order as the DuckDB twin)."""
+    return _fsum(f"zip_with({a}, {b}, (x, y) -> (x - y) * (x - y))")
 
 
 def _l2_sql(a: str, b: str, dim: int = SUB_DIM) -> str:
@@ -2105,17 +2035,37 @@ def _subvectors(e: DataFrame, carry: tuple = ()) -> DataFrame:
     (q211's increment encode threads ``cluster`` through instead of
     joining it back afterwards)."""
     return e.select(
-        "vec_id", *carry, F.posexplode(_chunked("embedding")).alias("sub", "sv")
+        "vec_id", *carry, F.posexplode(F.expr(_chunked("embedding"))).alias("sub", "sv")
     )
 
 
-def _chunked(col) -> Column:
+def _chunked(col: str) -> str:
     """Array of the N_SUB contiguous SUB_DIM-dim double subvectors of
     an embedding column — the in-row twin of :func:`_subvectors`
     (``_chunked(e)[s+1]`` == the (sub = s) row's ``sv``)."""
-    ev = F.transform(col, lambda x: x.cast("double"))
-    return F.array(
-        *[F.slice(ev, s * SUB_DIM + 1, SUB_DIM) for s in range(N_SUB)]
+    ev = _dbl(col)
+    return "array(" + ", ".join(
+        f"slice({ev}, {s * SUB_DIM + 1}, {SUB_DIM})" for s in range(N_SUB)
+    ) + ")"
+
+
+# Per-vector count of subspaces whose refit code, mapped through the
+# in-scope ``_map`` alignment (``_map[sub+1][r_cid+1]`` = standing cid),
+# differs from the standing code — the q212/q215 code-churn numerator.
+_CODE_MISMATCHES = (
+    "aggregate(zip_with(transform(r_codes, (c, s) -> "
+    "element_at(element_at(_map, s + 1), CAST(c AS INT) + 1)), s_codes, "
+    "(m, s0) -> CASE WHEN m != CAST(s0 AS BIGINT) THEN 1 ELSE 0 END), "
+    "0, (acc, x) -> acc + x)"
+)
+
+
+def _renest(flat: str, item: str) -> str:
+    """Re-nest a (sub, ...)-sorted flat N_SUB × K_PQ list by slicing:
+    ``[sub+1][i+1]`` = ``item`` of the flat entry ``f``."""
+    return (
+        f"transform(sequence(0, {N_SUB - 1}), s -> transform("
+        f"slice({flat}, s * {K_PQ} + 1, {K_PQ}), f -> {item}))"
     )
 
 
@@ -2133,68 +2083,45 @@ def _pq_cells_row(cent: DataFrame) -> DataFrame:
     extra tiny stage is ~0.1 s of pure scheduling per serve (measured
     while chasing the r18 A/B), and the collapse output is one row
     either way."""
-    flat = cent.agg(
+    cells = _renest("_f", "named_struct('cid', f.cid, 'cv', f.cv)")
+    return cent.agg(
         F.sort_array(F.collect_list(F.struct("sub", "cid", "cv"))).alias("_f")
-    )
-    return flat.select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(N_SUB - 1)),
-            lambda s: F.transform(
-                F.slice("_f", s * K_PQ + 1, K_PQ),
-                lambda e: F.struct(e["cid"].alias("cid"), e["cv"].alias("cv")),
-            ),
-        ).alias("_cells_by_sub")
-    )
+    ).select(F.expr(cells).alias("_cells_by_sub"))
 
 
-def _pq_code_expr(chunks: Column) -> Column:
+def _pq_code_expr(chunks: str) -> Column:
     """``array<int>`` of per-subspace argmin-L2 codes of ``chunks``
     against the in-scope ``_cells_by_sub`` (one broadcast row,
     :func:`_pq_cells_row`) — pure in-row, O(K_PQ) per subspace via the
     running min. Tie order (d ASC, cid ASC) and the never-NULL
     distance contract match the oracle's row_number replay exactly."""
-    return F.transform(
-        chunks,
-        lambda sv, s: _inrow_min(
-            F.transform(
-                F.element_at(F.col("_cells_by_sub"), s + F.lit(1)),
-                lambda c: F.struct(
-                    _l2_col(sv, c["cv"]).alias("_k"), c["cid"].alias("cid")
-                ),
-            )
-        )["cid"].cast("int"),
+    keyed = (
+        "transform(element_at(_cells_by_sub, s + 1), c -> named_struct("
+        f"'_k', {_l2('ch', 'c.cv')}, 'cid', c.cid))"
     )
+    return F.expr(f"transform({chunks}, (ch, s) -> CAST({_inrow_min(keyed)}.cid AS INT))")
 
 
-def _pq_lut_expr(qchunks: Column) -> Column:
+def _pq_lut_expr(qchunks: str) -> Column:
     """``array<array<double>>`` ADC lookup table of a query's chunk
     array against the in-scope ``_cells_by_sub``:
     ``lut[sub+1][cid+1] = ||qchunk_sub − cv_{sub,cid}||²`` — built
     once per (query[, probed cell]) row, so scoring a candidate is one
     in-row sum over its codes instead of N_SUB joined rows."""
-    return F.transform(
-        F.col("_cells_by_sub"),
-        lambda cells, s: F.transform(
-            cells,
-            lambda c: _l2_col(F.element_at(qchunks, s + F.lit(1)), c["cv"]),
-        ),
-    )
+    d = _l2(f"element_at({qchunks}, s + 1)", "c.cv")
+    return F.expr(f"transform(_cells_by_sub, (cells, s) -> transform(cells, c -> {d}))")
 
 
-def _adc_dist(codes, lut) -> Column:
+def _adc_dist(codes: str, lut: str) -> Column:
     """round(Σ_sub lut[sub+1][codes[sub+1]+1], 6) — the in-row ADC
     distance of one candidate's code row against one query LUT.
     Ascending-sub accumulation; the 6-decimal surface round is the
     cross-engine float discipline the narrow groupBy(sum) form used."""
-    contrib = F.transform(
-        codes,
-        lambda c, s: F.element_at(
-            F.element_at(lut, s + F.lit(1)), c.cast("int") + F.lit(1)
-        ),
+    contrib = (
+        f"transform({codes}, (c, s) -> "
+        f"element_at(element_at({lut}, s + 1), CAST(c AS INT) + 1))"
     )
-    return F.round(
-        F.aggregate(contrib, F.lit(0.0), lambda acc, x: acc + x), 6
-    )
+    return F.expr(f"round({_fsum(contrib)}, 6)")
 
 
 def pq_codebooks(e: DataFrame) -> DataFrame:
@@ -2255,17 +2182,12 @@ def pq_codebooks(e: DataFrame) -> DataFrame:
         cells = cent.groupBy("sub").agg(
             F.collect_list(F.struct("cid", "cv")).alias("_cells")
         )
-        best = _inrow_min(
-            F.transform(
-                "_cells",
-                lambda c: F.struct(
-                    _l2_col(F.col("sv"), c["cv"]).alias("_k"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        )["cid"]
+        keyed = (
+            "transform(_cells, c -> named_struct("
+            f"'_k', {_l2('sv', 'c.cv')}, 'cid', c.cid))"
+        )
         assign = sv.join(F.broadcast(cells), "sub").select(
-            "sub", best.alias("cluster"), "sv"
+            "sub", F.expr(f"{_inrow_min(keyed)}.cid").alias("cluster"), "sv"
         )
         means = assign.groupBy("sub", "cluster").agg(
             *[
@@ -2393,7 +2315,7 @@ def pq_probe_hits(
     ).select(
         "query_id",
         "vec_id",
-        _adc_dist(F.col("codes"), F.col("_qlut")).alias("approx_dist"),
+        _adc_dist("codes", "_qlut").alias("approx_dist"),
     )
     ws = Window.partitionBy("query_id").orderBy(F.col("approx_dist").asc(), "vec_id")
     sl = (
@@ -2401,13 +2323,7 @@ def pq_probe_hits(
         .where(F.col("_rk") <= shortlist)
         .drop("_rk")
     )
-    ev = F.transform("embedding", lambda x: x.cast("double"))
-    qv2 = F.transform("qv", lambda x: x.cast("double"))
-    ed = F.aggregate(
-        F.zip_with(ev, qv2, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    ed = F.expr(_l2(_dbl("embedding"), _dbl("qv")))
     rer = (
         sl.join(e.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(queries), "query_id")
@@ -2603,19 +2519,16 @@ def q157_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qlut))
         .select(
             "vec_id",
-            _adc_dist(F.col("codes"), F.col("_qlut")).alias("approx_dist"),
+            _adc_dist("codes", "_qlut").alias("approx_dist"),
         )
     )
     shortlist = scored.orderBy(F.col("approx_dist").asc(), "vec_id").limit(
         PQ_SHORTLIST
     )
-    ev = F.transform("embedding", lambda x: x.cast("double"))
-    qfull = e.where(F.col("vec_id") == QUERY_VEC_ID).select(ev.alias("qv"))
-    ed = F.aggregate(
-        F.zip_with(ev, F.col("qv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    qfull = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.expr(_dbl("embedding")).alias("qv")
     )
+    ed = F.expr(_l2(_dbl("embedding"), "qv"))
     rerank = (
         shortlist.join(e, "vec_id")
         .crossJoin(F.broadcast(qfull))
@@ -2727,11 +2640,7 @@ def _ivfadc_residuals(assigned: DataFrame, cent: DataFrame) -> DataFrame:
     ).select(
         "vec_id",
         "cluster",
-        F.zip_with(
-            F.transform("embedding", lambda x: x.cast("double")),
-            F.col("cv"),
-            lambda x, y: x - y,
-        ).alias("embedding"),
+        F.expr(f"zip_with({_dbl('embedding')}, cv, (x, y) -> x - y)").alias("embedding"),
     )
 
 
@@ -2790,9 +2699,7 @@ def ivfadc_probe_hits(
     cells BY the lookup equi-join itself (cluster is a join key), so
     ADC cost is sublinear in the corpus — the probed fraction — and
     raw vectors are touched for |queries| × shortlist rows only."""
-    qs = queries.select(
-        "query_id", F.transform("qv", lambda x: x.cast("double")).alias("qv")
-    )
+    qs = queries.select("query_id", F.expr(_dbl("qv")).alias("qv"))
     # probe ranking runs IN-ROW over a collapsed one-row codebook (the
     # ivf_serve_hits discipline — no (|queries| × k) exchange + window
     # sort, the term that grows with the cell-count policy's knob).
@@ -2802,38 +2709,19 @@ def ivfadc_probe_hits(
     cells = cent.select(F.struct("cid", "cv").alias("_c")).agg(
         F.collect_list("_c").alias("_cells")
     )
-
-    def _neg_qsim(c):
-        return F.coalesce(
-            -cosine_col(F.col("qv"), c["cv"]), F.lit(float("inf"))
-        )
-
+    ranked = (
+        f"sort_array(transform(_cells, c -> named_struct("
+        f"'_nq', {_neg_cos('qv', 'c.cv')}, 'cid', c.cid, 'cv', c.cv)))"
+    )
     qres = (
         qs.crossJoin(F.broadcast(cells))
         .select(
             "query_id",
             "qv",
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        F.transform(
-                            "_cells",
-                            lambda c: F.struct(
-                                _neg_qsim(c).alias("_nq"),
-                                c["cid"].alias("cid"),
-                                c["cv"].alias("cv"),
-                            ),
-                        )
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("_p"),
+            F.expr(f"explode(slice({ranked}, 1, {nprobe}))").alias("_p"),
         )
-        .select(
-            "query_id",
-            F.col("_p.cid").alias("pcell"),
-            F.zip_with("qv", F.col("_p.cv"), lambda x, y: x - y).alias("qr"),
+        .selectExpr(
+            "query_id", "_p.cid AS pcell", "zip_with(qv, _p.cv, (x, y) -> x - y) AS qr"
         )
     )
     # one ADC LUT row per (query, probed cell), built in-row against
@@ -2853,7 +2741,7 @@ def ivfadc_probe_hits(
             "query_id",
             "vec_id",
             "cluster",
-            _adc_dist(F.col("codes"), F.col("_qlut")).alias("approx_dist"),
+            _adc_dist("codes", "_qlut").alias("approx_dist"),
         )
     )
     ws = Window.partitionBy("query_id").orderBy(
@@ -2864,13 +2752,7 @@ def ivfadc_probe_hits(
         .where(F.col("_rk") <= shortlist)
         .drop("_rk")
     )
-    ev = F.transform("embedding", lambda x: x.cast("double"))
-    qv2 = F.transform("qv", lambda x: x.cast("double"))
-    ed = F.aggregate(
-        F.zip_with(ev, qv2, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    ed = F.expr(_l2(_dbl("embedding"), _dbl("qv")))
     rer = (
         sl.join(e.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(queries), "query_id")
@@ -3138,7 +3020,7 @@ def semantic_dedup_df(
     from ..sources.io import fan_out
 
     counts = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("_n"))
-    sub = capped_sub_col(F.col("_n"), F.col("embedding"), cell_cap)
+    sub = capped_sub_col("_n", "embedding", cell_cap)
     # size gate: one cheap count over the checkpointed assignment (a
     # documented driver-side scalar probe, like graph.py's convergence
     # aggregates). NOTE this count runs EAGERLY at DataFrame-
@@ -3160,7 +3042,7 @@ def semantic_dedup_df(
         "cluster",
         "embedding",
         sub.alias("sub"),
-        _norm(F.col("embedding")).alias("nrm"),
+        F.expr(_norm("embedding")).alias("nrm"),
     )
     a = base.select(
         F.col("vec_id").alias("m_id"),
@@ -3169,9 +3051,7 @@ def semantic_dedup_df(
         F.col("embedding").alias("a_emb"),
         F.col("nrm").alias("a_nrm"),
     )
-    sim = _dot(F.col("a_emb"), F.col("embedding")) / F.nullif(
-        F.col("a_nrm") * F.col("nrm"), F.lit(0.0)
-    )
+    sim = F.expr(_cos("a_emb", "embedding", "a_nrm", "nrm"))
     # above the gate the policy is AUTHORITATIVE: force the
     # (cluster, sub)-keyed sort-merge join rather than leaving the
     # strategy to the planner's size estimate — estimates are routinely
@@ -3518,10 +3398,7 @@ def _serve_ivf_incr_view(
         .crossJoin(F.broadcast(centn))
         .select(
             "cid",
-            (
-                _dot(F.col("embedding"), F.col("cv"))
-                / F.nullif(_norm(F.col("embedding")) * F.col("_cn"), F.lit(0.0))
-            ).alias("sim"),
+            F.expr(_cos("embedding", "cv", nb="_cn")).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "cid")
         .limit(N_PROBE)
@@ -3530,7 +3407,7 @@ def _serve_ivf_incr_view(
     q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qv")
     )
-    qsim = cosine_col(F.col("embedding"), F.col("qv"))
+    qsim = cosine_col("embedding", "qv")
     hits = (
         lists.join(F.broadcast(probe), lists.cluster == F.col("cid"))
         .where(F.col("vec_id") != QUERY_VEC_ID)
@@ -3687,7 +3564,7 @@ def q177_index_refit_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs = cent_s.select(F.col("cid").alias("s_cid"), F.col("cv").alias("s_cv"))
     cr = cent_r.select(F.col("cid").alias("r_cid"), F.col("cv").alias("r_cv"))
     pairs = cs.crossJoin(F.broadcast(cr)).select(
-        "s_cid", "r_cid", cosine_col(F.col("s_cv"), F.col("r_cv")).alias("cs")
+        "s_cid", "r_cid", cosine_col("s_cv", "r_cv").alias("cs")
     )
     near_s = pairs.groupBy("s_cid").agg(
         F.max_by(
@@ -4272,7 +4149,7 @@ def q212_ivfadc_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = sp.join(F.broadcast(rp), "sub").select(
         "sub", "s_cid", "r_cid",
-        _l2_col(F.col("s_cv"), F.col("r_cv")).alias("d"),
+        F.expr(_l2("s_cv", "r_cv")).alias("d"),
     )
     near_s = pairs.groupBy("sub", "s_cid").agg(
         F.min_by("r_cid", F.struct(F.col("d"), F.col("r_cid"))).alias(
@@ -4299,31 +4176,10 @@ def q212_ivfadc_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(
             F.collect_list(F.struct("sub", "r_cid", "mapped_s"))
         ).alias("_f")
-    ).select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(N_SUB - 1)),
-            lambda s: F.transform(
-                F.slice("_f", s * K_PQ + 1, K_PQ), lambda e: e["mapped_s"]
-            ),
-        ).alias("_map")
-    )
+    ).select(F.expr(_renest("_f", "f.mapped_s")).alias("_map"))
     sc = codes_s.select("vec_id", F.col("codes").alias("s_codes"))
     rc = codes_r.select("vec_id", F.col("codes").alias("r_codes"))
-    mapped = F.transform(
-        "r_codes",
-        lambda c, s: F.element_at(
-            F.element_at(F.col("_map"), s + F.lit(1)), c.cast("int") + F.lit(1)
-        ),
-    )
-    mism = F.aggregate(
-        F.zip_with(
-            mapped,
-            F.col("s_codes"),
-            lambda m, s0: F.when(m != s0.cast("long"), 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
+    mism = F.expr(_CODE_MISMATCHES)
     churn = (
         sc.join(rc, "vec_id")
         .crossJoin(F.broadcast(mrow))
@@ -4693,19 +4549,16 @@ def _serve_pq_incr_view(
         .crossJoin(F.broadcast(qlut))
         .select(
             "vec_id",
-            _adc_dist(F.col("codes"), F.col("_qlut")).alias("approx_dist"),
+            _adc_dist("codes", "_qlut").alias("approx_dist"),
         )
     )
     shortlist = scored.orderBy(F.col("approx_dist").asc(), "vec_id").limit(
         PQ_SHORTLIST
     )
-    ev = F.transform("embedding", lambda x: x.cast("double"))
-    qfull = e.where(F.col("vec_id") == QUERY_VEC_ID).select(ev.alias("qv"))
-    ed = F.aggregate(
-        F.zip_with(ev, F.col("qv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    qfull = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.expr(_dbl("embedding")).alias("qv")
     )
+    ed = F.expr(_l2(_dbl("embedding"), "qv"))
     rerank = (
         shortlist.join(e, "vec_id")
         .crossJoin(F.broadcast(qfull))
@@ -4887,7 +4740,7 @@ def q215_pq_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = sp.join(F.broadcast(rp), "sub").select(
         "sub", "s_cid", "r_cid",
-        _l2_col(F.col("s_cv"), F.col("r_cv")).alias("d"),
+        F.expr(_l2("s_cv", "r_cv")).alias("d"),
     )
     near_s = pairs.groupBy("sub", "s_cid").agg(
         F.min_by("r_cid", F.struct(F.col("d"), F.col("r_cid"))).alias(
@@ -4909,31 +4762,10 @@ def q215_pq_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(
             F.collect_list(F.struct("sub", "r_cid", "mapped_s"))
         ).alias("_f")
-    ).select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(N_SUB - 1)),
-            lambda s: F.transform(
-                F.slice("_f", s * K_PQ + 1, K_PQ), lambda e: e["mapped_s"]
-            ),
-        ).alias("_map")
-    )
+    ).select(F.expr(_renest("_f", "f.mapped_s")).alias("_map"))
     sc = codes_s.select("vec_id", F.col("codes").alias("s_codes"))
     rc = codes_r.select("vec_id", F.col("codes").alias("r_codes"))
-    mapped = F.transform(
-        "r_codes",
-        lambda c, s: F.element_at(
-            F.element_at(F.col("_map"), s + F.lit(1)), c.cast("int") + F.lit(1)
-        ),
-    )
-    mism = F.aggregate(
-        F.zip_with(
-            mapped,
-            F.col("s_codes"),
-            lambda m, s0: F.when(m != s0.cast("long"), 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
+    mism = F.expr(_CODE_MISMATCHES)
     churn = (
         sc.join(rc, "vec_id")
         .crossJoin(F.broadcast(mrow))

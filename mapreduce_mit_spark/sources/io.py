@@ -168,10 +168,18 @@ def read_corpus(
                 F.col("content").alias("text"),
             )
         )
-    rdd = spark.sparkContext.wholeTextFiles(path_glob).map(
+    return spark.createDataFrame(corpus_rdd(spark, path_glob), CORPUS_SCHEMA)
+
+
+def corpus_rdd(spark: SparkSession, paths: str):
+    """RDD of (basename, contents), one record per file. ``minPartitions``
+    asks for one split per core: without it Spark packs a small corpus
+    into min(defaultParallelism, 2) splits, so the map side of word
+    count and inverted index ran 2 tasks on a 4-core session."""
+    sc = spark.sparkContext
+    return sc.wholeTextFiles(paths, minPartitions=sc.defaultParallelism).map(
         lambda kv: (os.path.basename(kv[0]), kv[1])
     )
-    return spark.createDataFrame(rdd, CORPUS_SCHEMA)
 
 
 def read_text_lines(spark: SparkSession, path_glob: str) -> DataFrame:

@@ -1993,9 +1993,8 @@ def _serve_ivf_ingest_view(
         N_PROBE,
         QUERY_VEC_ID,
         Q175_RECALL_TARGET,
-        _dot,
+        _cos,
         _mark_exact_topk,
-        _norm,
         _with_cnorm,
         _with_recall,
         cosine_col,
@@ -2021,10 +2020,7 @@ def _serve_ivf_ingest_view(
         .crossJoin(F.broadcast(centn))
         .select(
             "cid",
-            (
-                _dot(F.col("embedding"), F.col("cv"))
-                / F.nullif(_norm(F.col("embedding")) * F.col("_cn"), F.lit(0.0))
-            ).alias("sim"),
+            F.expr(_cos("embedding", "cv", nb="_cn")).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "cid")
         .limit(N_PROBE)
@@ -2039,7 +2035,7 @@ def _serve_ivf_ingest_view(
     qv = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("qv")
     )
-    qsim = cosine_col(F.col("embedding"), F.col("qv"))
+    qsim = cosine_col("embedding", "qv")
     hits = (
         combined.where(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(qv))

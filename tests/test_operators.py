@@ -223,7 +223,7 @@ def test_cosine_matches_numpy(spark):
     df = spark.createDataFrame(
         [(a.tolist(), b.tolist())], "va array<float>, vb array<float>"
     )
-    got = df.select(cosine_col(F.col("va"), F.col("vb")).alias("c")).collect()[0]["c"]
+    got = df.select(cosine_col("va", "vb").alias("c")).collect()[0]["c"]
     want = float(
         np.dot(a.astype("float64"), b.astype("float64"))
         / (np.linalg.norm(a.astype("float64")) * np.linalg.norm(b.astype("float64")))
@@ -942,9 +942,9 @@ def test_recall_audit_over_sampled_query_set(spark):
     assert len(qids) > 1, "sample too small to be a multi-query audit"
 
     b = e.select(
-        "vec_id", "embedding", _bucket_col(F.col("embedding"), 4).alias("bucket")
+        "vec_id", "embedding", _bucket_col("embedding", 4).alias("bucket")
     )
-    qb = queries.withColumn("qbucket", _bucket_col(F.col("qv"), 4))
+    qb = queries.withColumn("qbucket", _bucket_col("qv", 4))
     hits = lsh_probe_hits(b, qb, ANN_K, _PROBE_XORS)
     audit = recall_audit(e, queries, hits, ANN_K).collect()
 
@@ -963,7 +963,7 @@ def test_recall_audit_over_sampled_query_set(spark):
         q0 = e.where(F.col("vec_id") == 0).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
         )
-    hits0 = lsh_probe_hits(b, q0.withColumn("qbucket", _bucket_col(F.col("qv"), 4)),
+    hits0 = lsh_probe_hits(b, q0.withColumn("qbucket", _bucket_col("qv", 4)),
                            ANN_K, _PROBE_XORS)
     audit0 = recall_audit(e, q0, hits0, ANN_K).collect()[0]
     assert abs(audit0.recall_at_k - q89[0].recall_at_k) < 1e-12
@@ -1024,7 +1024,7 @@ def test_learned_ivf_codebook_quality(spark):
         .select(
             "vec_id",
             "cid",
-            cosine_col(F.col("embedding"), F.col("cv")).alias("sim"),
+            cosine_col("embedding", "cv").alias("sim"),
         )
         .groupBy("vec_id")
         .agg(F.max_by("cid", F.struct(F.col("sim"), (-F.col("cid")).alias("nc"))).alias("cluster"))
@@ -2030,7 +2030,7 @@ def test_semantic_dedup_straggler_cell_subbuckets(spark):
     buckets = [
         r["b"]
         for r in df.where(F.col("cluster") == 0)
-        .select(_bucket_col(F.col("embedding"), N_SUB_PLANES).alias("b"))
+        .select(_bucket_col("embedding", N_SUB_PLANES).alias("b"))
         .collect()
     ]
     from collections import Counter
@@ -2318,13 +2318,12 @@ def test_margin_probes_superset_of_ring(spark):
 
     e = load_table(spark, SF_SMALL, "embeddings").limit(20)
     rows = (
-        e.select(
+        e.withColumn("qbucket", _bucket_col("embedding", 4))
+        .select(
             "vec_id",
             "embedding",
-            _bucket_col(F.col("embedding"), 4).alias("qbucket"),
-            _margin_probes_col(
-                F.col("embedding"), _bucket_col(F.col("embedding"), 4)
-            ).alias("probes"),
+            "qbucket",
+            _margin_probes_col("embedding", "qbucket").alias("probes"),
         )
         .collect()
     )
@@ -2524,6 +2523,31 @@ def test_global_running_sum_matches_single_task_window(spark):
         ).collect()
     }
     assert got == want and len(got) > 100
+
+
+def test_global_running_sum_null_leading_partitions(spark):
+    """A range partition whose first rows hold NULL values must still
+    carry the prefix of the partitions before it: SUM() OVER is NULL
+    only until the first non-NULL value in the GLOBAL order. 40 rows in
+    4 range partitions; the first three rows of every decade and the
+    whole 20s are NULL."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from mapreduce_mit_spark.operators.quantiles import global_running_sum
+
+    rows = [
+        (k, None if k % 10 < 3 or 20 <= k < 30 else k) for k in range(40)
+    ]
+    df = spark.createDataFrame(rows, "k long, v long")
+    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    want = {r.k: r.rt for r in df.select("k", F.sum("v").over(w).alias("rt")).collect()}
+    got = {
+        r.k: r.running_total
+        for r in global_running_sum(df, ["k"], "v", partitions=4).collect()
+    }
+    assert want[0] is None and want[10] == 42 and want[20] == 154
+    assert got == want
 
 
 def test_bigram_lm_penalizes_scrambled_word_order(spark):

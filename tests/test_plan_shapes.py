@@ -121,24 +121,16 @@ def test_margin_probe_count_is_pinned(spark):
     e = valid_embeddings(
         load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
     ).limit(8)
-    probes8 = e.select(
+    probes8 = e.withColumn("b8", _bucket_col("embedding", 8)).select(
         F.size(
-            _margin_probes_col(
-                F.col("embedding"),
-                _bucket_col(F.col("embedding"), 8),
-                n_planes=8,
-                top_m=Q171_TOP_M,
-            )
+            _margin_probes_col("embedding", "b8", n_planes=8, top_m=Q171_TOP_M)
         ).alias("n")
     ).collect()
     assert all(r.n <= Q171_TOP_M + 2 for r in probes8)
     assert N_TABLES_8P * (Q172_TOP_M + 2) == 64
     # 4-plane default == ring ∪ {double flip}: every single flip present
-    ring = e.select(
-        _bucket_col(F.col("embedding"), 4).alias("b"),
-        _margin_probes_col(
-            F.col("embedding"), _bucket_col(F.col("embedding"), 4)
-        ).alias("probes"),
+    ring = e.withColumn("b", _bucket_col("embedding", 4)).select(
+        "b", _margin_probes_col("embedding", "b").alias("probes")
     ).collect()
     for r in ring:
         got = set(r.probes)
@@ -148,14 +140,13 @@ def test_margin_probe_count_is_pinned(spark):
 
 def test_margin_probe_top_m_validated():
     import pytest as _pytest
-    from pyspark.sql import functions as F
 
     from mapreduce_mit_spark.plans.similarity import _margin_probes_col
 
     with _pytest.raises(ValueError, match="top_m"):
-        _margin_probes_col(F.col("x"), F.col("b"), n_planes=8, top_m=9)
+        _margin_probes_col("x", "b", n_planes=8, top_m=9)
     with _pytest.raises(ValueError, match="top_m"):
-        _margin_probes_col(F.col("x"), F.col("b"), n_planes=4, top_m=0)
+        _margin_probes_col("x", "b", n_planes=4, top_m=0)
 
 
 def test_multitable_lsh_gathers_ids_then_reranks(plan):
@@ -170,42 +161,55 @@ def test_multitable_lsh_gathers_ids_then_reranks(plan):
 
 
 def test_expr_and_column_probe_paths_agree(spark):
-    """Two implementations of the bucket/margin math now coexist — the
-    Column path (arbitrary expressions) and the parsed-expr fast path
-    (column-name strings, the hot multi-table route). They must stay
-    BIT-identical: same bucket ids and same probe sets at 8 planes on
-    real fixture vectors, else the serving family silently diverges
-    from the oracle's replay."""
-    from pyspark.sql import functions as F
+    """The sign-LSH bucket id has ONE Spark implementation — the parsed
+    Spark-SQL text of _bucket_col — and one twin, DuckDB's _bucket_sql,
+    which every LSH oracle replays. They must stay BIT-identical: the
+    same bucket ids at 8 planes of an independent plane family on the
+    same 32 real fixture vectors, else the serving family silently
+    diverges from the oracle's replay."""
+    import duckdb
 
     from mapreduce_mit_spark.plans.similarity import (
         _bucket_col,
-        _margin_probes_col,
+        _bucket_sql,
         _table_planes,
         valid_embeddings,
     )
     from mapreduce_mit_spark.sources.io import load_table
 
-    e = valid_embeddings(
-        load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-    ).limit(32).withColumn("qv", F.col("embedding"))
     planes = _table_planes(3)
-    rows = e.select(
-        _bucket_col(F.col("embedding"), 8, planes).alias("b_col"),
-        _bucket_col("embedding", 8, planes).alias("b_expr"),
-        _margin_probes_col(
-            F.col("qv"), _bucket_col(F.col("qv"), 8, planes),
-            n_planes=8, top_m=6, planes=planes,
-        ).alias("p_col"),
-        _margin_probes_col(
-            "qv", _bucket_col("qv", 8, planes),
-            n_planes=8, top_m=6, planes=planes,
-        ).alias("p_expr"),
+    rows = valid_embeddings(
+        load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
+    ).limit(32).select(
+        "vec_id", _bucket_col("embedding", 8, planes).alias("b")
     ).collect()
-    assert rows
-    for r in rows:
-        assert r.b_col == r.b_expr
-        assert list(r.p_col) == list(r.p_expr)
+    assert len(rows) == 32
+    ids = ", ".join(str(r.vec_id) for r in rows)
+    duck = dict(
+        duckdb.connect().execute(
+            f"SELECT vec_id, {_bucket_sql('embedding', 8, planes)} "
+            f"FROM read_parquet('{SF_SMALL}/embeddings.parquet') "
+            f"WHERE vec_id IN ({ids})"
+        ).fetchall()
+    )
+    assert {r.vec_id: r.b for r in rows} == duck
+
+
+def test_vector_serve_builds_without_python_lambdas(spark, monkeypatch):
+    """The vector math is one Spark-SQL text layer: building q85, q68,
+    q155 and the q157 PQ serve (index fits included) must not create a
+    single pyspark higher-order lambda — each ``_create_lambda`` costs
+    milliseconds and dozens of gateway calls of plan construction."""
+    import pyspark.sql.functions.builtin as builtin
+
+    made = []
+    real = builtin._create_lambda
+    monkeypatch.setattr(
+        builtin, "_create_lambda", lambda f: made.append(f) or real(f)
+    )
+    for name in ("q85_cosine_topk", "q68_ivf_ann", "q155_ivf_cells", "q157_pq_ann"):
+        registry.REGISTRY[name].fn(spark, SF_SMALL)
+    assert made == []
 
 
 def test_multitable_probes_df_matches_column_path(spark):
@@ -243,15 +247,11 @@ def test_multitable_probes_df_matches_column_path(spark):
     slow = set()
     for tid in range(n_tables):
         planes = _table_planes(tid)
-        rows = q.select(
+        rows = q.withColumn("qb", _bucket_col("qv", n_planes, planes)).select(
             "query_id",
             F.explode(
                 _margin_probes_col(
-                    F.col("qv"),
-                    _bucket_col(F.col("qv"), n_planes, planes),
-                    n_planes=n_planes,
-                    top_m=top_m,
-                    planes=planes,
+                    "qv", "qb", n_planes=n_planes, top_m=top_m, planes=planes
                 )
             ).alias("pbucket"),
         ).collect()
@@ -450,7 +450,7 @@ def test_ivf_assignment_broadcasts_codebook(spark, plan):
     cent = codebook_for(spark, SF_SMALL)
     sims = e.crossJoin(F.broadcast(cent)).select(
         "vec_id", "cid",
-        cosine_col(F.col("embedding"), F.col("cv")).alias("sim"),
+        cosine_col("embedding", "cv").alias("sim"),
     )
     build = sims.groupBy("vec_id").agg(
         F.max_by("cid", F.struct(F.col("sim"), (-F.col("cid")).alias("nc")))

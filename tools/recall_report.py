@@ -113,9 +113,9 @@ def build_report(spark: SparkSession, sf_dir: str, sample_frac: float = 0.05) ->
     queries = sample_queries(e, sample_frac)
 
     b = e.select(
-        "vec_id", "embedding", _bucket_col(F.col("embedding"), 4).alias("bucket")
+        "vec_id", "embedding", _bucket_col("embedding", 4).alias("bucket")
     )
-    qb = queries.withColumn("qbucket", _bucket_col(F.col("qv"), 4))
+    qb = queries.withColumn("qbucket", _bucket_col("qv", 4))
     cent_ivf, _lists = ivf_index_for(spark, sf_dir)
     cent_pq, codes_pq = pq_index_for(spark, sf_dir)
     cent_c, pcent, codes_adc = ivfadc_index_for(spark, sf_dir)
