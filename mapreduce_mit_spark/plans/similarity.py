@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1626,6 +1627,20 @@ ivf_index_for, ivf_index_save, ivf_index_load, ivf_index_attach = fitted_family(
 )
 
 
+def _materialize_shared_ctes(sql: str) -> str:
+    """Mark every CTE that ``sql`` references more than once ``AS
+    MATERIALIZED``. DuckDB otherwise evaluates an inlined CTE once per
+    reference, and the Lloyd chains read step r-1 twice per step, so
+    the work doubles per iteration (the trap the LSH band CTEs hit,
+    plans/dedup.py). Materializing changes no result: at sf0.001 on 4
+    cores q212's oracle went from 25.8 s to 2.0 s and q160's from
+    14.2 s to 1.2 s."""
+    for name in re.findall(r"(?:WITH|,)\s*(\w+) AS \(", sql):
+        if len(re.findall(rf"\b{name}\b", sql)) > 2:  # defined + 2 uses
+            sql = re.sub(rf"\b{name} AS \(", f"{name} AS MATERIALIZED (", sql, count=1)
+    return sql
+
+
 def _ivf_codebook_sql(
     k: int = N_IVF_CENTROIDS,
     iters: int = N_KMEANS_ITERS,
@@ -2411,7 +2426,7 @@ def _pq_codebook_sql(
 
 @register(
     "q157_pq_ann",
-    oracle=f"""
+    oracle=_materialize_shared_ctes(f"""
     WITH {_pq_codebook_sql()},
     codes AS (
       SELECT vec_id, sub, cluster FROM (
@@ -2469,7 +2484,7 @@ def _pq_codebook_sql(
            (recall_at_k >= {Q157_RECALL_TARGET}) AS recall_ok
     FROM marked, rec
     ORDER BY dist ASC, vec_id
-    """,
+    """),
     tags=("similarity", "ann", "sketch", "quantization"),
 )
 def q157_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2774,7 +2789,7 @@ def _ivfadc_oracle_sql() -> str:
         f"list_transform(range(1, {DIM} + 1), "
         f"i -> CAST(q.embedding[i] AS DOUBLE) - c.cv[i])"
     )
-    return f"""
+    return _materialize_shared_ctes(f"""
     WITH {_ivf_codebook_sql()},
     csims AS (
       SELECT e.vec_id, e.embedding, c.cid,
@@ -2868,7 +2883,7 @@ def _ivfadc_oracle_sql() -> str:
            (recall_at_k >= {Q160_RECALL_TARGET}) AS recall_ok
     FROM marked, rec
     ORDER BY dist ASC, vec_id
-    """
+    """)
 
 
 @register(
@@ -3798,7 +3813,7 @@ def _q211_oracle(standing_pred: str | None = None) -> str:
         f"list_transform(range(1, {DIM} + 1), "
         f"i -> CAST(q.embedding[i] AS DOUBLE) - c.cv[i])"
     )
-    return f"""
+    return _materialize_shared_ctes(f"""
     WITH ev AS (SELECT * FROM {EMB_VALID_SQL} AS v),
     standing AS (SELECT * FROM ev WHERE {standing_pred}),
     {_ivf_codebook_sql(src='standing')},
@@ -3897,7 +3912,7 @@ def _q211_oracle(standing_pred: str | None = None) -> str:
            recall_at_k, (recall_at_k >= {Q211_RECALL_TARGET}) AS recall_ok
     FROM marked, rec
     ORDER BY dist ASC, vec_id
-    """
+    """)
 
 
 @register(
@@ -4009,7 +4024,7 @@ def _q212_oracle() -> str:
         f"list_transform(range(1, {DIM} + 1), "
         f"i -> CAST(a.embedding[i] AS DOUBLE) - c.cv[i])"
     )
-    return f"""
+    return _materialize_shared_ctes(f"""
     WITH ev AS (SELECT * FROM {EMB_VALID_SQL} AS v),
     standing AS (SELECT * FROM ev WHERE {standing_pred}),
     {_ivf_codebook_sql(src='standing', prefix='s')},
@@ -4093,7 +4108,7 @@ def _q212_oracle() -> str:
            (c.code_churn_frac >= {Q212_CODE_CHURN_TAU}) AS retrain_recommended
     FROM near_s n LEFT JOIN pop p ON p.sub = n.sub AND p.cid = n.s_cid, churn c
     ORDER BY n.sub, n.s_cid
-    """
+    """)
 
 
 @register(
@@ -4415,7 +4430,7 @@ def _q214_oracle(standing_pred: str | None = None) -> str:
             "substr(md5('ing1:' || CAST(vec_id AS VARCHAR)), 1, 4) "
             f"< '{Q175_STANDING_HEX}'"
         )
-    return f"""
+    return _materialize_shared_ctes(f"""
     WITH ev AS (SELECT * FROM {EMB_VALID_SQL} AS v),
     standing AS (SELECT * FROM ev WHERE {standing_pred}),
     {_pq_codebook_sql(src='ev', fit_src='standing')},
@@ -4477,7 +4492,7 @@ def _q214_oracle(standing_pred: str | None = None) -> str:
            recall_at_k, (recall_at_k >= {Q214_RECALL_TARGET}) AS recall_ok
     FROM marked, rec
     ORDER BY dist ASC, vec_id
-    """
+    """)
 
 
 @register(
@@ -4621,7 +4636,7 @@ def _q215_oracle() -> str:
         "substr(md5('ing1:' || CAST(vec_id AS VARCHAR)), 1, 4) "
         f"< '{Q175_STANDING_HEX}'"
     )
-    return f"""
+    return _materialize_shared_ctes(f"""
     WITH ev AS (SELECT * FROM {EMB_VALID_SQL} AS v),
     standing AS (SELECT * FROM ev WHERE {standing_pred}),
     {_pq_codebook_sql(src='standing', prefix='s')},
@@ -4679,7 +4694,7 @@ def _q215_oracle() -> str:
            (c.code_churn_frac >= {Q215_CODE_CHURN_TAU}) AS retrain_recommended
     FROM near_s n LEFT JOIN pop p ON p.sub = n.sub AND p.cid = n.s_cid, churn c
     ORDER BY n.sub, n.s_cid
-    """
+    """)
 
 
 @register(

@@ -10,9 +10,9 @@ pushdown-friendly — the primary format for the driver tables), line text,
 CSV, JSON.
 
 Scale notes:
-- ``load_table`` is a plain ``spark.read.parquet`` — column pruning and
-  predicate pushdown reach the scan automatically when queries are
-  declarative (verified via ``.explain`` in tests).
+- ``load_table`` is a schema-supplied ``spark.read.parquet`` — column
+  pruning and predicate pushdown reach the scan automatically when
+  queries are declarative (verified via ``.explain`` in tests).
 - ``read_corpus`` keeps the reference's one-row-per-file granularity via
   ``wholeTextFiles``; this is only for golden-parity workloads (16 small
   books). At 100 TB, documents live in parquet (the ``documents`` table),
@@ -68,15 +68,48 @@ def ensure_reader_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# path → inferred schema. A bare spark.read.parquet(path) runs a
-# 1-task footer-read job on EVERY call; supplying the schema makes
-# query construction pure plan analysis (zero jobs — pinned by
-# tests/test_plan_shapes.py::test_plan_construction_runs_no_jobs).
-_TABLE_SCHEMAS: dict[str, T.StructType] = {}
+def _per_file(spark: SparkSession, kind: str, path: str, make):
+    """``make()`` once per (session, ``kind``, version of the file at
+    ``path``), keyed (kind, realpath, size, mtime_ns): a file rewritten
+    in place supersedes its entry. The dict is the session's own, apart
+    from the index cache (plans/_util._session_cache): a serve pass is
+    checked to add nothing to that one."""
+    from ..plans._util import _cache_put, source_fingerprint
+
+    key = (kind,) + source_fingerprint(path)
+    cache = getattr(spark, "_mms_table_cache", None)
+    if cache is None:
+        cache = spark._mms_table_cache = {}
+    if key not in cache:
+        _cache_put(cache, key, make())
+    return cache[key]
+
+
+def read_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema a table file is read with: one footer-read job
+    per file version, none after, so query construction is pure plan
+    analysis (zero jobs, pinned by
+    tests/test_plan_shapes.py::test_plan_construction_runs_no_jobs).
+
+    TIMESTAMP_NTZ columns (ordinary parquet written without a tz, e.g.
+    by DuckDB/pandas/pyarrow) are declared TIMESTAMP, so the scan reads
+    them as such: strict consumers (``unix_micros``, range frames over
+    event time) work on ANY parquet source, and with the session TZ
+    pinned UTC the values are identical, with no per-row cast."""
+    ensure_reader_confs(spark)  # before inference: ts reads as nanos-as-long
+    return _per_file(spark, "schema", path, lambda: T.StructType([
+        T.StructField(f.name, T.TimestampType(), f.nullable, f.metadata)
+        if isinstance(f.dataType, T.TimestampNTZType) else f
+        for f in spark.read.parquet(path).schema
+    ]))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table: ``{sf_dir}/{name}.parquet``.
+
+    The same DataFrame object comes back for every call on one version
+    of the file: a fresh read cost ~12 ms (file index, Hadoop conf,
+    analysis) per table per warm query.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS); with
     ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as a long of
@@ -84,31 +117,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     exactly what DuckDB does reading the same file)."""
     ensure_reader_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if path not in _TABLE_SCHEMAS:
-        # one footer-read job per (path, process); inference runs AFTER
-        # ensure_reader_confs so nanos-as-long is reflected in the schema
-        _TABLE_SCHEMAS[path] = spark.read.parquet(path).schema
-    df = spark.read.schema(_TABLE_SCHEMAS[path]).parquet(path)
-    return normalize_ns_timestamps(df)
+    return _per_file(spark, "table", path, lambda: normalize_ns_timestamps(
+        spark.read.schema(read_schema(spark, path)).parquet(path)
+    ))
 
 
 def normalize_ns_timestamps(df: DataFrame) -> DataFrame:
-    """Normalize timestamp flavors at the source boundary.
-
-    - nanos-as-long ``ts`` (the driver's TIMESTAMP(NANOS) parquet read
-      under ``nanosAsLong``) → µs timestamp via integer division (ns
-      values ~1.7e18 exceed double precision).
-    - TIMESTAMP_NTZ columns (ordinary parquet written without a tz,
-      e.g. by DuckDB/pandas) → TIMESTAMP: with the session TZ pinned
-      UTC the cast is value-identity, and it keeps strict consumers
-      (``unix_micros``, range frames over event time) working on ANY
-      parquet source, not just the driver's.
-    """
+    """nanos-as-long ``ts`` (a TIMESTAMP(NANOS) parquet column read
+    under ``nanosAsLong``) → µs timestamp via integer division (ns
+    values ~1.7e18 exceed double precision)."""
     if "ts" in df.columns and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.TimestampNTZType):
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
 
 

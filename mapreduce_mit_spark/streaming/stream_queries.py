@@ -76,9 +76,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The file stream source requires a directory, so the single parquet
     file is exposed through a scratch dir of symlinks — the stand-in for
     the object-store prefix a production stream would tail."""
-    from ..sources.io import ensure_reader_confs, normalize_ns_timestamps
+    from ..sources.io import normalize_ns_timestamps, read_schema
 
-    ensure_reader_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
     stage = os.path.join(
         tempfile.gettempdir(), "mms_stream", sf_dir.strip("/").replace("/", "_")
@@ -102,8 +101,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
         if os.path.realpath(link) != os.path.realpath(path):
             raise RuntimeError(f"stream stage link points elsewhere: {link}")
-    schema = spark.read.parquet(path).schema  # ts arrives as long (nanos)
-    return normalize_ns_timestamps(spark.readStream.schema(schema).parquet(stage))
+    # the batch tables' read schema: nanos ts arrives as long
+    return normalize_ns_timestamps(
+        spark.readStream.schema(read_schema(spark, path)).parquet(stage)
+    )
 
 
 def _final_updates(spark: SparkSession, name: str, seq_col: str = "n_events") -> DataFrame:

@@ -284,6 +284,34 @@ def test_load_table_normalizes_ntz_timestamps(spark, tmp_path):
     assert df.selectExpr("unix_micros(ts)").collect()[0][0] == 1709296496789000
 
 
+def test_load_table_cached_per_file_version(spark, tmp_path):
+    """A second load of an unchanged file hands back the same DataFrame
+    and runs no job; a file rewritten in place with an extra column
+    shows that column on the next load (a path-keyed schema would
+    silently drop it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_mit_spark.sources.io import load_table
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    df = load_table(spark, str(tmp_path), "region")
+    sc = spark.sparkContext
+    sc.setJobGroup("load-table-hit", "a cached load must not run jobs")
+    try:
+        again = load_table(spark, str(tmp_path), "region")
+    finally:
+        sc.setJobGroup(None, None)
+    assert again is df
+    assert sc.statusTracker().getJobIdsForGroup("load-table-hit") == []
+
+    pq.write_table(pa.table({"k": [1, 2], "extra": ["a", "b"]}), path)
+    df2 = load_table(spark, str(tmp_path), "region")
+    assert df2.columns == ["k", "extra"]
+    assert sorted(df2.collect()) == [(1, "a"), (2, "b")]
+
+
 def test_roundtrip_queries_idempotent_within_session(spark):
     """q55/q56/q57 invoked twice in one process must return identical
     results: the per-kind scratch dir is REUSED on the second call, so
