@@ -205,6 +205,22 @@ def _cache_put(cache: dict, key: tuple, value) -> None:
     cache[key] = value
 
 
+class Family:
+    """What :func:`fitted_family` returns: the four lifecycle functions,
+    the family's identity (``kind``, the session-cache tag; ``source``,
+    the fingerprinted file) and its ONE artifact writer ``write``.
+    Iterating yields ``(for, save, load, attach)``, the quartet each
+    definition site binds to module-level names."""
+
+    def __init__(self, kind, source, for_, save, load, attach, write):
+        self.kind, self.source = kind, source
+        self.for_, self.save, self.load, self.attach = for_, save, load, attach
+        self.write = write
+
+    def __iter__(self):
+        return iter((self.for_, self.save, self.load, self.attach))
+
+
 def fitted_family(
     kind: str,
     source: str,
@@ -213,10 +229,10 @@ def fitted_family(
     prime_extra=None,
     params: dict | None = None,
     mutable: tuple = (),
-):
+) -> Family:
     """Factory for the fit/save/load/attach quartet every persisted
     model family shares — ONE implementation of the artifact
-    lifecycle instead of eight hand-rolled copies:
+    lifecycle instead of a hand-rolled copy per family:
 
     - ``<family>_for(spark, sf_dir, **fit_kwargs)``: the memoized fit
       — once per (session, source fingerprint), served from the
@@ -224,10 +240,16 @@ def fitted_family(
       return one DataFrame per entry in ``tables`` (a bare DataFrame
       for single-table families), each already localCheckpointed if
       the family wants eager materialization.
-    - ``<family>_save(spark, sf_dir, out_dir)``: persist every
-      sub-table to ``out_dir/<name>`` parquet (partitioned where the
-      table declares a partition column), stamped with the source
-      fingerprint, each table's fitted schema, and the fit ``params``.
+    - ``write(sf_dir, out_dir, value, **moved)``: the ONE artifact
+      writer — every sub-table to ``out_dir/<name>`` parquet
+      (partitioned where the table declares a partition column),
+      stamped with the source fingerprint, each table's fitted schema,
+      and the fit ``params`` with ``moved`` applied. A refresh builds
+      its tables and hands them here with the moved values; moving a
+      param that is not ``mutable`` raises ValueError before anything
+      is written.
+    - ``<family>_save(spark, sf_dir, out_dir)``: fit (the memo), then
+      ``write``.
     - ``<family>_load(spark, out_dir)``: read the sub-tables back
       through :func:`read_index_table` so partition-column type
       re-inference can never change the serving schema.
@@ -245,11 +267,12 @@ def fitted_family(
     meta stamp and is REQUIRED to match at attach; it is also tagged
     onto every served DataFrame as ``_mms_fit_params`` so serving
     helpers can validate an explicitly-passed artifact (the
-    lsh_multitable_hits plane-count check). ``mutable`` names params
-    whose stamped value may differ from the fit-time default (the
-    refresh lifecycle's moved standing boundary): attach still
-    requires them PRESENT, and loads tag the ARTIFACT's stamped
-    values so serving code binds to what was actually fitted."""
+    lsh_multitable_hits plane-count check, :func:`standing_hex`).
+    ``mutable`` names params whose stamped value may differ from the
+    fit-time default (the refresh lifecycle's moved standing
+    boundary): attach still requires them PRESENT, and loads tag the
+    ARTIFACT's stamped values so serving code binds to what was
+    actually fitted."""
     import os
 
     def _tag(value, stamped: dict | None = None):
@@ -269,12 +292,18 @@ def fitted_family(
             _cache_put(cache, key, value)
         return value
 
-    def save_fn(spark, sf_dir: str, out_dir: str) -> None:
-        value = for_fn(spark, sf_dir)
+    def write_fn(sf_dir: str, out_dir: str, value, **moved) -> None:
+        fixed = sorted(set(moved) - set(mutable))
+        if fixed:
+            raise ValueError(
+                f"{kind}: params {fixed} are not mutable (mutable: "
+                f"{list(mutable)}) — an artifact whose layout contract "
+                "moved must be refitted under new code, not restamped"
+            )
         dfs = value if isinstance(value, tuple) else (value,)
         schemas = {}
         for (name, _cols, part), df in zip(tables, dfs):
-            # cluster a partitioned save by its partition column so the
+            # cluster a partitioned write by its partition column so the
             # tree gets one file set per partition value, not
             # source-partitions × values tiny files. REBALANCE, not
             # repartition (r17 ADVICE): a plain hash repartition on a
@@ -284,7 +313,7 @@ def fitted_family(
             # hint clusters by the column AND splits skewed partitions,
             # so write parallelism survives hot cells. Fits are
             # map-shaped since r18 (no fit-side repartition), so this
-            # is the ONE clustering shuffle a save pays.
+            # is the ONE clustering shuffle a write pays.
             w = (
                 df.hint("rebalance", part) if part else df
             ).write.mode("overwrite")
@@ -293,8 +322,14 @@ def fitted_family(
             w.parquet(os.path.join(out_dir, name))
             schemas[name] = df.schema.json()
         write_index_meta(
-            out_dir, os.path.join(sf_dir, source), schemas=schemas, params=params
+            out_dir,
+            os.path.join(sf_dir, source),
+            schemas=schemas,
+            params=dict(params or {}, **moved) or None,
         )
+
+    def save_fn(spark, sf_dir: str, out_dir: str) -> None:
+        write_fn(sf_dir, out_dir, for_fn(spark, sf_dir))
 
     def load_fn(spark, out_dir: str):
         import json
@@ -332,9 +367,29 @@ def fitted_family(
         (save_fn, "save"),
         (load_fn, "load"),
         (attach_fn, "attach"),
+        (write_fn, "write"),
     ):
         f.__name__ = f.__qualname__ = f"{kind}_{suffix}"
-    return for_fn, save_fn, load_fn, attach_fn
+    return Family(kind, source, for_fn, save_fn, load_fn, attach_fn, write_fn)
+
+
+def standing_hex(artifact: DataFrame) -> str:
+    """The increment-carve boundary of a standing artifact (the
+    q175/q211/q214 ANN indexes, the q178/q187 snapshots): the
+    ``standing_hex`` param :func:`fitted_family` tags on every fitted or
+    loaded DataFrame, so a refreshed artifact (boundary moved past every
+    md5 prefix) serves through the same path with an empty increment.
+    An untagged frame raises ValueError: carving at a default boundary
+    the artifact never declared would silently double-count or drop
+    the rows between the two."""
+    try:
+        return artifact._mms_fit_params["standing_hex"]
+    except (AttributeError, KeyError):
+        raise ValueError(
+            "artifact carries no standing_hex stamp — pass the DataFrame "
+            "a fitted_family fit, load or attach returned, not a frame "
+            "derived from it"
+        ) from None
 
 
 def read_index_table(
@@ -385,16 +440,12 @@ def hex_int_sql(hexpr: str, start: int, length: int) -> str:
 def refresh_then_serve(
     spark: SparkSession,
     sf_dir: str,
-    *,
-    cache_family: str,
-    src_table: str,
+    family: Family,
     refresh_fn,
-    attach_fn,
     serve_fn,
 ) -> DataFrame:
     """Shared REFRESH → ATTACH → SERVE → cache-restore choreography for
-    the lifecycle "act" queries (q188/q189/q207/q208/q209 and any
-    future family's refresh-then-serve):
+    the lifecycle "act" queries (q188/q189/q207/q208/q209/q213/q216):
 
     1. build a PID-KEYED scratch dir under the system temp root —
        two concurrent sessions refreshing the same source must not
@@ -403,10 +454,10 @@ def refresh_then_serve(
        by the source fingerprint so re-runs in one process reuse the
        same path idempotently;
     2. ``refresh_fn(spark, sf_dir, out_dir)`` — the family's retrain
-       job, persisting the refreshed artifact + stamped meta;
-    3. save the session-cache entry for ``(cache_family,
-       fingerprint(src))``, then ``attach_fn(spark, sf_dir, out_dir)``
-       — the ordinary fingerprint+param gate (a doctored stamp still
+       job, persisting the refreshed artifact through ``family.write``;
+    3. save the session-cache entry for ``(family.kind,
+       fingerprint(family.source))``, then ``family.attach`` — the
+       ordinary fingerprint+param gate (a doctored stamp still
        refuses), which installs the refreshed artifact in the cache
        and returns it;
     4. ``serve_fn(spark, sf_dir, artifact)`` builds the returned plan —
@@ -420,21 +471,20 @@ def refresh_then_serve(
     import os
     import tempfile
 
-    src_path = os.path.join(sf_dir, src_table)
-    fp = source_fingerprint(src_path)
+    fp = source_fingerprint(os.path.join(sf_dir, family.source))
     out_dir = os.path.join(
         tempfile.gettempdir(),
-        f"mms_{cache_family}_refresh",
+        f"mms_{family.kind}_refresh",
         f"pid{os.getpid()}",
         "-".join(map(str, fp[1:])),
     )
     refresh_fn(spark, sf_dir, out_dir)
 
     cache = _session_cache(spark)
-    key = (cache_family,) + fp
+    key = (family.kind,) + fp
     prev = cache.get(key)
     try:
-        artifact = attach_fn(spark, sf_dir, out_dir)
+        artifact = family.attach(spark, sf_dir, out_dir)
         return serve_fn(spark, sf_dir, artifact)
     finally:
         if prev is not None:

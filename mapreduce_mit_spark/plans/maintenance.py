@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ._util import fitted_family, t
+from ._util import fitted_family, refresh_then_serve, standing_hex, t
 
 # --- q178: incremental aggregate maintenance (tenth persisted family) ------
 
@@ -49,18 +49,6 @@ Q178_STANDING_HEX = "e666"
 # 'ffff' would read as increments and double-count against a snapshot
 # that already folded them.)
 AGG_REFRESHED_HEX = "g000"
-
-
-def agg_standing_hex(snap: DataFrame) -> str:
-    """The increment-carve boundary is a property of the ATTACHED
-    snapshot artifact, not of the serving code: read it from the
-    ``_mms_fit_params`` tag the family factory stamps on every fitted
-    or loaded artifact, so a refreshed snapshot (boundary moved to
-    :data:`AGG_REFRESHED_HEX`) is served correctly by the SAME serve
-    path — closing the lifecycle that used to end at a refusal."""
-    return getattr(snap, "_mms_fit_params", {}).get(
-        "standing_hex", Q178_STANDING_HEX
-    )
 
 # Exact-integer measures: revenue in cents, quantity in whole units.
 # Integer partials merge associatively and commutatively, so
@@ -143,7 +131,7 @@ def _agg_snapshot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_snapshot_save,
     agg_snapshot_load,
     agg_snapshot_attach,
-) = fitted_family(
+) = agg_snapshot_family = fitted_family(
     "agg_snapshot",
     "lineitem.parquet",
     [
@@ -157,7 +145,7 @@ def _agg_snapshot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     params={"standing_hex": Q178_STANDING_HEX, "group_key": "l_suppkey"},
     # standing_hex is MUTABLE: a refreshed snapshot legitimately moves
     # the boundary (to AGG_REFRESHED_HEX) and serving code reads the
-    # stamped value back (agg_standing_hex) — group_key stays immutable
+    # stamped value back (standing_hex) — group_key stays immutable
     mutable=("standing_hex",),
 )
 
@@ -235,12 +223,12 @@ def q178_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
 def _serve_agg_from(spark: SparkSession, sf_dir: str, snap: DataFrame) -> DataFrame:
     """q178's serve against an EXPLICIT snapshot artifact: carve the
     increments at the snapshot's OWN stamped boundary
-    (:func:`agg_standing_hex`) — a freshly-fitted snapshot carves at
+    (:func:`standing_hex`) — a freshly-fitted snapshot carves at
     Q178_STANDING_HEX, a refreshed one at AGG_REFRESHED_HEX (empty
     increment) — merge, and derive the view. Shared by q178 and the
     refresh-serve q188."""
     li = t(spark, sf_dir, "lineitem")
-    incr = li.where(~(_agg_split_key() < agg_standing_hex(snap)))
+    incr = li.where(~(_agg_split_key() < standing_hex(snap)))
     merged = _merge_partials(
         snap.withColumn("has_new_i", F.lit(0)).unionByName(
             _lineitem_partials(incr).withColumn("has_new_i", F.lit(1))
@@ -882,7 +870,7 @@ def agg_snapshot_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None
     above every md5 prefix, i.e. everything standing, zero pending
     increments. Because ``standing_hex`` is a MUTABLE family param and
     the serve path carves at the artifact's stamped boundary
-    (:func:`agg_standing_hex`), the refreshed snapshot ATTACHES and
+    (:func:`standing_hex`), the refreshed snapshot ATTACHES and
     SERVES through the ordinary lifecycle (q188 registers exactly
     that) — the increment feed restarts from empty, with no
     double-count possible at any boundary value.
@@ -892,24 +880,16 @@ def agg_snapshot_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None
     q178 serve cost, NOT a full refit. The pytest contract: the
     refreshed partials equal a from-scratch ``_lineitem_partials`` over
     the whole table, bit-for-bit."""
-    import os
-
-    from ._util import write_index_meta
-
     li = t(spark, sf_dir, "lineitem")
     snap = agg_snapshot_for(spark, sf_dir)
-    incr_p = _lineitem_partials(li.where(~(_agg_split_key() < agg_standing_hex(snap))))
+    incr_p = _lineitem_partials(li.where(~(_agg_split_key() < standing_hex(snap))))
     refreshed = _merge_partials(
         snap.withColumn("has_new_i", F.lit(0)).unionByName(
             incr_p.withColumn("has_new_i", F.lit(0))
         )
     ).drop("has_new")
-    refreshed.write.mode("overwrite").parquet(os.path.join(out_dir, "partials"))
-    write_index_meta(
-        out_dir,
-        os.path.join(sf_dir, "lineitem.parquet"),
-        schemas={"partials": refreshed.schema.json()},
-        params={"standing_hex": AGG_REFRESHED_HEX, "group_key": "l_suppkey"},
+    agg_snapshot_family.write(
+        sf_dir, out_dir, refreshed, standing_hex=AGG_REFRESHED_HEX
     )
 
 
@@ -951,7 +931,7 @@ def q188_agg_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint+param gate (``standing_hex`` is a mutable param — the
     gate still refuses a wrong ``group_key`` or a stale fingerprint),
     and serve q178's view from it. The serve path carves increments at
-    the artifact's stamped boundary (:func:`agg_standing_hex`), which
+    the artifact's stamped boundary (:func:`standing_hex`), which
     for a refreshed snapshot is provably empty — so the view is the
     full-table aggregate with ``has_new = false`` everywhere, exactly
     what the oracle recomputes from scratch.
@@ -969,14 +949,9 @@ def q188_agg_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (SURVEY §2.3 maintenance block — the
     refresh half of the materialized-view lifecycle)."""
-    from ._util import refresh_then_serve
-
     return refresh_then_serve(
-        spark, sf_dir,
-        cache_family="agg_snapshot",
-        src_table="lineitem.parquet",
+        spark, sf_dir, agg_snapshot_family,
         refresh_fn=agg_snapshot_refresh,
-        attach_fn=agg_snapshot_attach,
         serve_fn=_serve_agg_from,
     )
 
@@ -1047,7 +1022,7 @@ def _hist_bucket_col() -> Column:
     hist_snapshot_save,
     hist_snapshot_load,
     hist_snapshot_attach,
-) = fitted_family(
+) = hist_snapshot_family = fitted_family(
     "hist_snapshot",
     "orders.parquet",
     [
@@ -1188,12 +1163,12 @@ def _hist_quantile_view(
     """q187's serve against an EXPLICIT histogram artifact: bucketize
     the increment against the artifact's boundaries, merge counts,
     interpolate quantiles, and audit in-band. The increment carve uses
-    the artifact's STAMPED boundary (:func:`agg_standing_hex` — the
+    the artifact's STAMPED boundary (:func:`standing_hex` — the
     same mutable-param discipline as the agg snapshot), so a refreshed
     histogram (q189) serves with a provably empty increment and zero
     clamps through this one code path."""
     o = t(spark, sf_dir, "orders").where(F.col("o_totalprice").isNotNull())
-    incr = o.where(~(_order_split_key() < agg_standing_hex(counts_s)))
+    incr = o.where(~(_order_split_key() < standing_hex(counts_s)))
     incr_b = incr.crossJoin(F.broadcast(ext)).select(
         _hist_bucket_col().alias("bucket"),
         (
@@ -1300,10 +1275,6 @@ def hist_snapshot_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> Non
     full lifecycle. Pytest contract: refreshed counts == a
     from-scratch full-data bucketize, bit-for-bit, and the post-
     refresh serve clamps nothing."""
-    import os
-
-    from ._util import write_index_meta
-
     o = t(spark, sf_dir, "orders").where(F.col("o_totalprice").isNotNull())
     ext = o.agg(
         F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
@@ -1314,13 +1285,8 @@ def hist_snapshot_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> Non
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    counts.write.mode("overwrite").parquet(os.path.join(out_dir, "counts"))
-    ext.write.mode("overwrite").parquet(os.path.join(out_dir, "extent"))
-    write_index_meta(
-        out_dir,
-        os.path.join(sf_dir, "orders.parquet"),
-        schemas={"counts": counts.schema.json(), "extent": ext.schema.json()},
-        params={"standing_hex": AGG_REFRESHED_HEX, "n_buckets": Q187_BUCKETS},
+    hist_snapshot_family.write(
+        sf_dir, out_dir, (counts, ext), standing_hex=AGG_REFRESHED_HEX
     )
 
 
@@ -1352,14 +1318,9 @@ def q189_hist_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (SURVEY §2.3 maintenance block — the
     retrain half of the distribution-sketch lifecycle)."""
-    from ._util import refresh_then_serve
-
     return refresh_then_serve(
-        spark, sf_dir,
-        cache_family="hist_snapshot",
-        src_table="orders.parquet",
+        spark, sf_dir, hist_snapshot_family,
         refresh_fn=hist_snapshot_refresh,
-        attach_fn=hist_snapshot_attach,
         serve_fn=lambda s, d, art: _hist_quantile_view(s, d, *art),
     )
 

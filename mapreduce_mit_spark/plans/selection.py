@@ -44,7 +44,7 @@ from pyspark.sql.window import Window
 
 from ..functions.textfns import tokens_col, tokens_sql
 from ..registry import register
-from ._util import fitted_family, t, tw
+from ._util import fitted_family, refresh_then_serve, t, tw
 
 # --- q190: DSIR importance weights (twelfth persisted family) --------------
 
@@ -103,7 +103,7 @@ def _dsir_count_tables(spark: SparkSession, sf_dir: str):
     dsir_lm_save,
     dsir_lm_load,
     dsir_lm_attach,
-) = fitted_family(
+) = dsir_lm_family = fitted_family(
     "dsir_lm",
     "documents.parquet",
     [
@@ -756,7 +756,7 @@ def _bpe_train_merges(wf: DataFrame) -> DataFrame:
     bpe_merges_save,
     bpe_merges_load,
     bpe_merges_attach,
-) = fitted_family(
+) = bpe_merges_family = fitted_family(
     "bpe_merges",
     "documents.parquet",
     [("merges", ["merge_rank", "pair", "merged", "n"], None)],
@@ -1336,19 +1336,7 @@ def dsir_lm_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
     Cost: one tokenize+bucket-count pass over the corpus — the refit
     price q199's sketch-sized audit deliberately gates."""
-    import os
-
-    from ._util import write_index_meta
-
-    target, raw = _dsir_count_tables(spark, sf_dir)
-    target.write.mode("overwrite").parquet(os.path.join(out_dir, "target"))
-    raw.write.mode("overwrite").parquet(os.path.join(out_dir, "raw"))
-    write_index_meta(
-        out_dir,
-        os.path.join(sf_dir, "documents.parquet"),
-        schemas={"target": target.schema.json(), "raw": raw.schema.json()},
-        params={"n_buckets": DSIR_BUCKETS, "target_lang": DSIR_TARGET_LANG},
-    )
+    dsir_lm_family.write(sf_dir, out_dir, _dsir_count_tables(spark, sf_dir))
 
 
 @register(
@@ -1377,17 +1365,12 @@ def q208_dsir_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (SURVEY §2.3 maintenance block — the
     retrain half of the selection-model lifecycle)."""
-    from ._util import refresh_then_serve
-
     # plan-build reads the cache (the attached artifact) once; the
     # returned DataFrame closes over it, so the helper's finally-restore
     # cannot un-attach the served plan
     return refresh_then_serve(
-        spark, sf_dir,
-        cache_family="dsir_lm",
-        src_table="documents.parquet",
+        spark, sf_dir, dsir_lm_family,
         refresh_fn=dsir_lm_refresh,
-        attach_fn=dsir_lm_attach,
         serve_fn=lambda s, d, _art: q190_dsir_importance(s, d),
     )
 
@@ -1403,17 +1386,8 @@ def bpe_merges_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     Cost: one word-count pass over the corpus + N vocabulary-sized
     merge rounds — q196's training price, which the coverage audit
     deliberately gates."""
-    import os
-
-    from ._util import write_index_meta
-
-    merges = _bpe_train_merges(_bpe_word_freq(spark, sf_dir))
-    merges.write.mode("overwrite").parquet(os.path.join(out_dir, "merges"))
-    write_index_meta(
-        out_dir,
-        os.path.join(sf_dir, "documents.parquet"),
-        schemas={"merges": merges.schema.json()},
-        params={"n_merges": BPE_MERGES},
+    bpe_merges_family.write(
+        sf_dir, out_dir, _bpe_train_merges(_bpe_word_freq(spark, sf_dir))
     )
 
 
@@ -1442,14 +1416,9 @@ def q209_bpe_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none (SURVEY §2.3 maintenance block — the
     retrain half of the tokenizer lifecycle)."""
-    from ._util import refresh_then_serve
-
     return refresh_then_serve(
-        spark, sf_dir,
-        cache_family="bpe_merges",
-        src_table="documents.parquet",
+        spark, sf_dir, bpe_merges_family,
         refresh_fn=bpe_merges_refresh,
-        attach_fn=bpe_merges_attach,
         serve_fn=lambda s, d, _art: q197_bpe_vocab(s, d),
     )
 

@@ -30,7 +30,9 @@ from ._util import (
     _cache_put,
     _session_cache,
     fitted_family,
+    refresh_then_serve,
     source_fingerprint,
+    standing_hex,
     t,
     tw,
 )
@@ -560,7 +562,9 @@ def q89_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     marked = _mark_exact_topk(
         hits.withColumn("query_id", F.lit(QUERY_VEC_ID).cast("long")), b, queries1, ANN_K
     )
-    return _with_recall(marked, ANN_K, Q89_RECALL_TARGET).select(
+    return _with_recall(
+        marked, ANN_K, Q89_RECALL_TARGET, F.col("_sim").desc()
+    ).select(
         "vec_id", "label", "bucket", F.round("_sim", 4).alias("cos_sim"),
         "in_exact_topk", "recall_at_k", "recall_ok",
     )
@@ -641,9 +645,13 @@ def _mark_exact_topk(
     )
 
 
-def _with_recall(marked: DataFrame, k: int, target: float) -> DataFrame:
+def _with_recall(
+    marked: DataFrame, k: int, target: float, key: Column
+) -> DataFrame:
     """Attach each query's recall@k column (hit-count / k, exact in
-    both engines) and its contract bit, preserving score order.
+    both engines) and its contract bit, ordered by the score ``key``
+    (``_sim`` descending for the cosine serves, ``dist`` ascending for
+    the L2 ones), ties by vec_id.
 
     One window pass: the hit count is ``sum(...) OVER (PARTITION BY
     query_id)`` on the marked rows themselves. A groupBy joined back
@@ -655,7 +663,7 @@ def _with_recall(marked: DataFrame, k: int, target: float) -> DataFrame:
     return (
         marked.withColumn("recall_at_k", hits.cast("double") / F.lit(float(k)))
         .withColumn("recall_ok", F.col("recall_at_k") >= target)
-        .orderBy(F.col("_sim").desc(), "vec_id")
+        .orderBy(key, "vec_id")
     )
 
 
@@ -1785,7 +1793,9 @@ def q68_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     marked = _mark_exact_topk(
         hits.withColumn("query_id", F.lit(QUERY_VEC_ID).cast("long")), e, queries1, ANN_K
     )
-    return _with_recall(marked, ANN_K, Q68_RECALL_TARGET).select(
+    return _with_recall(
+        marked, ANN_K, Q68_RECALL_TARGET, F.col("_sim").desc()
+    ).select(
         "vec_id", "label", "cluster", F.round("_sim", 4).alias("cos_sim"),
         "in_exact_topk", "recall_at_k", "recall_ok",
     )
@@ -2076,11 +2086,26 @@ _CODE_MISMATCHES = (
 
 
 def _renest(flat: str, item: str) -> str:
-    """Re-nest a (sub, ...)-sorted flat N_SUB × K_PQ list by slicing:
-    ``[sub+1][i+1]`` = ``item`` of the flat entry ``f``."""
+    """Re-nest a (sub, cid)-sorted flat N_SUB × K_PQ list of structs by
+    slicing: ``[sub+1][cid+1]`` = ``item`` of the flat entry ``f``.
+
+    Slicing by position is only right on a DENSE grid, so the grid is
+    checked in-row: the list must hold exactly N_SUB × K_PQ entries and
+    entry i must be (i div K_PQ, i mod K_PQ). A missing or duplicated
+    (sub, cid) would otherwise shift every entry after it by one and
+    mislabel every code; instead the task fails with ``raise_error``
+    naming the offending position."""
+    n = N_SUB * K_PQ
     return (
+        f"CASE WHEN size({flat}) = {n} THEN "
         f"transform(sequence(0, {N_SUB - 1}), s -> transform("
-        f"slice({flat}, s * {K_PQ} + 1, {K_PQ}), f -> {item}))"
+        f"slice({flat}, s * {K_PQ} + 1, {K_PQ}), (f, c) -> "
+        f"CASE WHEN f.sub = s AND f.cid = c THEN {item} "
+        "ELSE raise_error(concat('PQ grid entry ', "
+        f"s * {K_PQ} + c, ' is (', f.sub, ', ', f.cid, "
+        f"'), expected (', s, ', ', c, ')')) END)) "
+        f"ELSE raise_error(concat('PQ grid has ', size({flat}), "
+        f"' entries, expected {n}')) END"
     )
 
 
@@ -2522,6 +2547,22 @@ def q157_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded at the surface only."""
     e = t(spark, sf_dir, "embeddings")
     cent, codes = pq_index_for(spark, sf_dir)
+    return _pq_serve(e, cent, codes, Q157_RECALL_TARGET).select(
+        "vec_id", "approx_dist", "dist", "in_exact_topk", "recall_at_k",
+        "recall_ok",
+    )
+
+
+def _pq_serve(
+    e: DataFrame, cent: DataFrame, codes: DataFrame, target: float
+) -> DataFrame:
+    """The flat-PQ serve chain for the pinned query, shared by q157 (the
+    full-corpus index) and q214/q216 (a standing index's codes plus its
+    encoded increment): ADC shortlist over ``codes`` → exact rerank of
+    the shortlist → top-k → the in-band L2 recall audit (PQ
+    approximates L2, so the audit metric is L2). Returns (vec_id,
+    approx_dist, dist, in_exact_topk, query_id, recall_at_k,
+    recall_ok) ordered by dist."""
     # one LUT row for the pinned query (broadcast), one in-row sum per
     # candidate code row — no groupBy(vec_id) exchange (r18 wide codes)
     qlut = (
@@ -2560,22 +2601,12 @@ def q157_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(ANN_K)
         .select("vec_id", F.lit(True).alias("in_exact_topk"))
     )
-    marked = hits.join(F.broadcast(exact), "vec_id", "left").withColumn(
-        "in_exact_topk", F.coalesce("in_exact_topk", F.lit(False))
+    marked = hits.join(F.broadcast(exact), "vec_id", "left").select(
+        "vec_id", "approx_dist", "dist",
+        F.coalesce("in_exact_topk", F.lit(False)).alias("in_exact_topk"),
+        F.lit(QUERY_VEC_ID).alias("query_id"),
     )
-    rec = marked.agg(
-        (F.sum(F.col("in_exact_topk").cast("long")).cast("double") / F.lit(float(ANN_K)))
-        .alias("recall_at_k")
-    )
-    return (
-        marked.crossJoin(F.broadcast(rec))
-        .withColumn("recall_ok", F.col("recall_at_k") >= Q157_RECALL_TARGET)
-        .select(
-            "vec_id", "approx_dist", "dist", "in_exact_topk", "recall_at_k",
-            "recall_ok",
-        )
-        .orderBy(F.col("dist").asc(), "vec_id")
-    )
+    return _with_recall(marked, ANN_K, target, F.col("dist").asc())
 
 
 # ---------------------------------------------------------------------------
@@ -2921,26 +2952,27 @@ def q160_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`ivfadc_index_for` — fit once, serve many."""
     e = t(spark, sf_dir, "embeddings")
     cent, pcent, codes = ivfadc_index_for(spark, sf_dir)
+    return _ivfadc_serve(e, cent, pcent, codes, Q160_RECALL_TARGET).select(
+        "vec_id", "cluster", "approx_dist", "dist", "in_exact_topk",
+        "recall_at_k", "recall_ok",
+    )
+
+
+def _ivfadc_serve(
+    e: DataFrame, cent: DataFrame, pcent: DataFrame, codes: DataFrame,
+    target: float,
+) -> DataFrame:
+    """q160's serve tail for the pinned query, shared with q211/q213 (a
+    standing index's codes plus its encoded increment): the
+    :func:`ivfadc_probe_hits` chain, then the in-band L2 recall audit
+    against the exact scan. Returns the hit rows with in_exact_topk,
+    recall_at_k and recall_ok, ordered by dist."""
     q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     hits = ivfadc_probe_hits(cent, pcent, codes, e, q, ANN_K)
     marked = _mark_exact_topk(hits, e, q, ANN_K, metric="l2")
-    rec = marked.agg(
-        (
-            F.sum(F.col("in_exact_topk").cast("long")).cast("double")
-            / F.lit(float(ANN_K))
-        ).alias("recall_at_k")
-    )
-    return (
-        marked.crossJoin(F.broadcast(rec))
-        .withColumn("recall_ok", F.col("recall_at_k") >= Q160_RECALL_TARGET)
-        .select(
-            "vec_id", "cluster", "approx_dist", "dist", "in_exact_topk",
-            "recall_at_k", "recall_ok",
-        )
-        .orderBy(F.col("dist").asc(), "vec_id")
-    )
+    return _with_recall(marked, ANN_K, target, F.col("dist").asc())
 
 
 # ---------------------------------------------------------------------------
@@ -3230,68 +3262,91 @@ def _standing_key() -> Column:
 IVF_REFRESHED_HEX = "g000"
 
 
-def ivf_standing_hex(artifact: DataFrame) -> str:
-    """The increment-carve boundary is a property of the ATTACHED
-    index artifact, not of the serving code (maintenance.py's
-    ``agg_standing_hex``, applied to the ninth family): read it from
-    the ``_mms_fit_params`` tag so a refreshed index (boundary moved
-    to :data:`IVF_REFRESHED_HEX`) serves through the SAME q175/q176
-    paths with a provably empty increment."""
-    return getattr(artifact, "_mms_fit_params", {}).get(
-        "standing_hex", Q175_STANDING_HEX
+def _standing_family(kind: str, tables: list[tuple], body, **params):
+    """ONE lifecycle for the three standing quantized indexes (IVF
+    q175/q177/q207, IVFADC q211–q213, flat PQ q214–q216).
+    ``body(spark, sf_dir, hex_b)`` fits every table on the valid
+    vectors whose split key sorts below ``hex_b``:
+
+    - the session memo (``*_for``, hence save and the serves) is the
+      body at :data:`Q175_STANDING_HEX` with its last, corpus-sized
+      table pinned by an eager localCheckpoint — many plans read it;
+    - the refresh — the retrain q177/q212/q215's alarms call for — is
+      the SAME body at :data:`IVF_REFRESHED_HEX` (everything standing,
+      zero pending increments), written straight from the plan (its
+      one consumer) through the family writer with the moved boundary
+      stamped. It never reads the memo, whose cache key carries no
+      boundary.
+
+    ``standing_hex`` is the one mutable param, read back by the serves
+    through :func:`standing_hex`; ``params`` are the layout contracts
+    attach refuses to move. Returns (family, refresh)."""
+
+    def memo_fit(spark: SparkSession, sf_dir: str) -> tuple:
+        *head, corpus = body(spark, sf_dir, Q175_STANDING_HEX)
+        return (*head, corpus.localCheckpoint(eager=True))
+
+    family = fitted_family(
+        kind,
+        "embeddings.parquet",
+        tables,
+        memo_fit,
+        params={"standing_hex": Q175_STANDING_HEX, **params},
+        mutable=("standing_hex",),
     )
 
+    def refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
+        family.write(
+            sf_dir, out_dir, body(spark, sf_dir, IVF_REFRESHED_HEX),
+            standing_hex=IVF_REFRESHED_HEX,
+        )
 
-def _ivf_standing_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    refresh.__name__ = refresh.__qualname__ = f"{kind}_index_refresh"
+    return family, refresh
+
+
+def _ivf_standing_fit(
+    spark: SparkSession, sf_dir: str, hex_b: str
+) -> tuple[DataFrame, DataFrame]:
     """The STANDING-corpus IVF index fit: (cent, lists) with the
     codebook fitted on — and the inverted lists covering — only the
-    standing ~90% hash split of the corpus. This is the maintained
+    valid vectors below the boundary ``hex_b``. This is the maintained
     artifact of the index-freshness pattern (q175/q176): a periodic
     offline job refits it; BETWEEN refits, serving sessions attach it
     and pay only increment assignment (one broadcast-argmax over the
     new vectors) plus probed-cell reads — FAISS's train()-then-add()
     split with the trained index as a persisted table. Same gate
     (valid_embeddings), same codebook fit, same assignment pass as the
-    full-corpus IVF family — only the fit population differs."""
-    e = valid_embeddings(tw(spark, sf_dir, "embeddings"))
-    standing = e.where(_standing_key() < Q175_STANDING_HEX)
-    cent = ivf_codebook(standing)
-    # map-shaped lists; the one clustering shuffle happens at save
-    # time (the _ivf_fit note)
-    lists = _assign_to_codebook(standing, _with_cnorm(cent)).localCheckpoint(
-        eager=True
+    full-corpus IVF family — only the fit population differs. The
+    lists stay map-shaped; the one clustering shuffle happens at write
+    time (the _ivf_fit note)."""
+    standing = valid_embeddings(tw(spark, sf_dir, "embeddings")).where(
+        _standing_key() < hex_b
     )
-    return (cent, lists)
+    cent = ivf_codebook(standing)
+    return (cent, _assign_to_codebook(standing, _with_cnorm(cent)))
 
 
-# Standing-corpus IVF lifecycle via fitted_family — the NINTH persisted
-# family. Same layout as the full-corpus IVF index (coarse + lists
-# partitioned by cluster, so probed-cell serves prune files); the
-# standing split key rides the param stamp, so an artifact fitted on a
-# different split refuses to attach.
-(
-    ivf_standing_index_for,
-    ivf_standing_index_save,
-    ivf_standing_index_load,
-    ivf_standing_index_attach,
-) = fitted_family(
+# Standing-corpus IVF lifecycle — the NINTH persisted family. Same
+# layout as the full-corpus IVF index (coarse + lists partitioned by
+# cluster, so probed-cell serves prune files); k and iters are the
+# immutable contracts.
+ivf_standing_family, ivf_standing_index_refresh = _standing_family(
     "ivf_standing",
-    "embeddings.parquet",
     [
         ("coarse", ["cid", "cv"], None),
         ("lists", ["vec_id", "label", "cluster", "embedding"], "cluster"),
     ],
     _ivf_standing_fit,
-    params={
-        "standing_hex": Q175_STANDING_HEX,
-        "k": N_IVF_CENTROIDS,
-        "iters": N_KMEANS_ITERS,
-    },
-    # standing_hex is MUTABLE: a refreshed index legitimately moves the
-    # boundary (to IVF_REFRESHED_HEX) and serving code reads the stamped
-    # value back (ivf_standing_hex) — k and iters stay immutable
-    mutable=("standing_hex",),
+    k=N_IVF_CENTROIDS,
+    iters=N_KMEANS_ITERS,
 )
+(
+    ivf_standing_index_for,
+    ivf_standing_index_save,
+    ivf_standing_index_load,
+    ivf_standing_index_attach,
+) = ivf_standing_family
 
 
 def _q175_oracle(standing_pred: str | None = None) -> str:
@@ -3389,22 +3444,24 @@ def q175_ivf_incremental_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference analog: none (SURVEY §2.3 extension — the ANN-side twin
     of q161's incremental dedup: increments broadcast, the standing
     corpus never reshuffles)."""
-    cent, slists = ivf_standing_index_for(spark, sf_dir)
-    return _serve_ivf_incr_view(spark, sf_dir, cent, slists)
+    return _serve_ivf_incr_view(
+        spark, sf_dir, ivf_standing_index_for(spark, sf_dir)
+    )
 
 
 def _serve_ivf_incr_view(
-    spark: SparkSession, sf_dir: str, cent: DataFrame, slists: DataFrame
+    spark: SparkSession, sf_dir: str, art: tuple
 ) -> DataFrame:
     """Serve q175's view from a standing (cent, lists) artifact:
     assign the increment carve to the broadcast codebook, union into
     the lists, probe/top-k/recall-audit. The increment boundary is the
-    ARTIFACT's stamped one (:func:`ivf_standing_hex`), so a refreshed
+    ARTIFACT's stamped one (:func:`standing_hex`), so a refreshed
     index (q207) serves an empty increment through this same path —
     shared by q175 and q207."""
+    cent, slists = art
     e = valid_embeddings(t(spark, sf_dir, "embeddings"))
     centn = _with_cnorm(cent)
-    incr = e.where(~(_standing_key() < ivf_standing_hex(cent)))
+    incr = e.where(~(_standing_key() < standing_hex(cent)))
     lists = slists.withColumn("is_new", F.lit(False)).unionByName(
         _assign_to_codebook(incr, centn).withColumn("is_new", F.lit(True))
     )
@@ -3440,7 +3497,9 @@ def _serve_ivf_incr_view(
         queries1,
         ANN_K,
     )
-    return _with_recall(marked, ANN_K, Q175_RECALL_TARGET).select(
+    return _with_recall(
+        marked, ANN_K, Q175_RECALL_TARGET, F.col("_sim").desc()
+    ).select(
         "vec_id", "label", "cluster", "is_new",
         F.round("_sim", 4).alias("cos_sim"),
         "in_exact_topk", "recall_at_k", "recall_ok",
@@ -3626,53 +3685,6 @@ def q177_index_refit_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q207: the retrain — q177's refit alarm gets its act ---------------------
 
 
-def ivf_standing_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """The RETRAIN job q177's ``refit_recommended`` calls for: refit
-    the codebook AND the inverted lists over the FULL current corpus
-    (standing ∪ increments — the refit candidate q177 measured churn
-    against), persist in the ninth family's exact layout, and stamp
-    the moved boundary :data:`IVF_REFRESHED_HEX` — everything
-    standing, zero pending increments. Because ``standing_hex`` is a
-    MUTABLE family param and the serve paths carve at the artifact's
-    stamped boundary (:func:`ivf_standing_hex`), the refreshed index
-    attaches and serves through the ordinary lifecycle with no code
-    change — q188's snapshot-rotation discipline applied to the ANN
-    tier.
-
-    Cost: the q68-family fit (one codebook k-means over the corpus +
-    one assignment pass) — the full retrain price the alarm
-    deliberately gates; this is why the alarm exists instead of
-    refitting on a timer."""
-    import os
-
-    from ._util import write_index_meta
-
-    e = valid_embeddings(tw(spark, sf_dir, "embeddings"))
-    cent = ivf_codebook(e)
-    # ONE clustering shuffle straight into the partitioned write
-    # (r18): rebalance-by-cluster keeps one file set per cell under
-    # partitionBy with AQE splitting any skewed cell, and drops the
-    # r17 checkpoint materialize-then-rescan (the write is the only
-    # consumer of the assignment plan)
-    lists = _assign_to_codebook(e, _with_cnorm(cent)).hint(
-        "rebalance", "cluster"
-    )
-    cent.write.mode("overwrite").parquet(os.path.join(out_dir, "coarse"))
-    lists.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(out_dir, "lists")
-    )
-    write_index_meta(
-        out_dir,
-        os.path.join(sf_dir, "embeddings.parquet"),
-        schemas={"coarse": cent.schema.json(), "lists": lists.schema.json()},
-        params={
-            "standing_hex": IVF_REFRESHED_HEX,
-            "k": N_IVF_CENTROIDS,
-            "iters": N_KMEANS_ITERS,
-        },
-    )
-
-
 @register(
     "q207_ivf_refresh_serve",
     oracle=_q175_oracle(standing_pred="TRUE"),
@@ -3682,10 +3694,11 @@ def ivf_standing_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> None
 def q207_ivf_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REFRESH-THEN-SERVE for the ANN index — closes q177's alarm →
     act loop (the q188 pattern applied to the ninth family): run
-    :func:`ivf_standing_refresh` (full-corpus refit stamped at the
-    moved boundary), ATTACH the refreshed artifact through the
-    ordinary fingerprint+param gate (``standing_hex`` is mutable; a
-    doctored ``k``/``iters`` or a stale fingerprint still refuses),
+    :func:`ivf_standing_index_refresh` (the standing fit at the moved
+    boundary — a full-corpus refit — stamped with it), ATTACH the
+    refreshed artifact through the ordinary fingerprint+param gate
+    (``standing_hex`` is mutable; a doctored ``k``/``iters`` or a
+    stale fingerprint still refuses),
     and serve q175's view from it. The serve carves increments at the
     artifact's stamped boundary — provably empty for a refreshed
     index — so the view is the full-corpus IVF serve with
@@ -3697,21 +3710,17 @@ def q207_ivf_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     never poison a later q175/q176/q177 call whose oracle models the
     STALE boundary.
 
-    Scale shape: the refresh is the one-shot retrain the alarm gates;
-    the attach+serve after it is q175's ordinary probed-cell cost with
-    an EMPTY increment scan.
+    Scale shape: the refresh is the one-shot retrain the alarm gates
+    (one codebook k-means over the corpus + one assignment pass, the
+    lists written straight from the plan); the attach+serve after it
+    is q175's ordinary probed-cell cost with an EMPTY increment scan.
 
     Reference analog: none (SURVEY §2.3 maintenance block — the
     retrain half of the index-freshness lifecycle)."""
-    from ._util import refresh_then_serve
-
     return refresh_then_serve(
-        spark, sf_dir,
-        cache_family="ivf_standing",
-        src_table="embeddings.parquet",
-        refresh_fn=ivf_standing_refresh,
-        attach_fn=ivf_standing_index_attach,
-        serve_fn=lambda s, d, art: _serve_ivf_incr_view(s, d, *art),
+        spark, sf_dir, ivf_standing_family,
+        refresh_fn=ivf_standing_index_refresh,
+        serve_fn=_serve_ivf_incr_view,
     )
 
 
@@ -3737,64 +3746,52 @@ def q207_ivf_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q211_RECALL_TARGET = 0.4
 
 
-def ivfadc_standing_hex(artifact: DataFrame) -> str:
-    """The increment-carve boundary is a property of the ATTACHED
-    artifact (:func:`ivf_standing_hex` applied to this family): read
-    it from the ``_mms_fit_params`` tag so a refreshed index (boundary
-    moved to :data:`IVF_REFRESHED_HEX`) serves through the SAME
-    q211 path with a provably empty increment."""
-    return getattr(artifact, "_mms_fit_params", {}).get(
-        "standing_hex", Q175_STANDING_HEX
-    )
-
-
 def _ivfadc_standing_fit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, hex_b: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The STANDING-corpus IVFADC fit: (coarse_cent, pq_cent, codes)
     with every learned structure fitted on — and the codes covering —
-    only the standing hash split. The coarse half IS the ninth
-    family's standing index (shared through the session cache — one
-    fit serves q175/q176/q207 and this family); the residual PQ
-    codebooks and codes are fitted over the standing lists exactly as
+    only the valid vectors below ``hex_b``. The residual PQ codebooks
+    and codes are fitted over the standing lists exactly as
     :func:`_ivfadc_fit` does over the full corpus."""
-    cent, slists = ivf_standing_index_for(spark, sf_dir)
-    resid = _ivfadc_residuals(slists, cent).localCheckpoint(eager=True)
+    # at the standing boundary the coarse half IS the ninth family's
+    # memo (one fit serves q175/q176/q207 and this family); any other
+    # boundary (the refresh) fits it here — that memo's key carries no
+    # boundary, so reading it would return the stale standing lists
+    cent, lists = (
+        ivf_standing_index_for(spark, sf_dir)
+        if hex_b == Q175_STANDING_HEX
+        else _ivf_standing_fit(spark, sf_dir, hex_b)
+    )
+    resid = _ivfadc_residuals(lists, cent).localCheckpoint(eager=True)
     pcent = pq_codebooks(resid.select("vec_id", "embedding"))
     # map-shaped wide codes; the one clustering shuffle happens at
-    # save time (the _ivfadc_fit note)
-    codes = _ivfadc_codes(resid, pcent).localCheckpoint(eager=True)
-    return (cent, pcent, codes)
+    # write time (the _ivfadc_fit note)
+    return (cent, pcent, _ivfadc_codes(resid, pcent))
 
 
-# Standing-corpus IVFADC lifecycle via fitted_family — the FIFTEENTH
-# persisted family. Same layout as the full-corpus IVFADC index
-# (coarse + per-subspace PQ codebooks + codes partitioned by cluster,
-# so probed-cell serves prune files); the standing boundary rides the
-# param stamp as a MUTABLE param (the refresh lifecycle moves it),
-# while k_coarse/n_sub/k_pq stay immutable contracts.
-(
-    ivfadc_standing_index_for,
-    ivfadc_standing_index_save,
-    ivfadc_standing_index_load,
-    ivfadc_standing_index_attach,
-) = fitted_family(
+# Standing-corpus IVFADC lifecycle — the FIFTEENTH persisted family.
+# Same layout as the full-corpus IVFADC index (coarse + per-subspace
+# PQ codebooks + codes partitioned by cluster, so probed-cell serves
+# prune files); k_coarse/n_sub/k_pq are the immutable contracts.
+ivfadc_standing_family, ivfadc_standing_index_refresh = _standing_family(
     "ivfadc_standing",
-    "embeddings.parquet",
     [
         ("coarse", ["cid", "cv"], None),
         ("pq", ["sub", "cid", "cv"], None),
         ("codes", ["vec_id", "cluster", "codes"], "cluster"),
     ],
     _ivfadc_standing_fit,
-    params={
-        "standing_hex": Q175_STANDING_HEX,
-        "k_coarse": N_IVF_CENTROIDS,
-        "n_sub": N_SUB,
-        "k_pq": K_PQ,
-    },
-    mutable=("standing_hex",),
+    k_coarse=N_IVF_CENTROIDS,
+    n_sub=N_SUB,
+    k_pq=K_PQ,
 )
+(
+    ivfadc_standing_index_for,
+    ivfadc_standing_index_save,
+    ivfadc_standing_index_load,
+    ivfadc_standing_index_attach,
+) = ivfadc_standing_family
 
 
 def _q211_oracle(standing_pred: str | None = None) -> str:
@@ -3955,43 +3952,26 @@ def _serve_ivfadc_incr_view(
 ) -> DataFrame:
     """Serve q211's view from a standing (cent, pcent, codes)
     artifact: residual-PQ-encode the increment carve against the
-    broadcast codebooks, union into the codes, run q160's serving
-    chain, mark is_new + the recall audit. The increment boundary is
-    the ARTIFACT's stamped one (:func:`ivfadc_standing_hex`), so a
-    refreshed index (q213) serves an empty increment through this
-    same path — shared by q211 and q213."""
+    broadcast codebooks, union into the codes, run q160's serve tail
+    (:func:`_ivfadc_serve`), mark is_new. The increment boundary is the
+    ARTIFACT's stamped one (:func:`standing_hex`), so a refreshed index
+    (q213) serves an empty increment through this same path — shared
+    by q211 and q213."""
     cent, pcent, codes_s = art
     e = t(spark, sf_dir, "embeddings")
-    hex_b = ivfadc_standing_hex(cent)
-    incr = valid_embeddings(e).where(~(_standing_key() < F.lit(hex_b)))
+    is_new = ~(_standing_key() < F.lit(standing_hex(cent)))
     # FAISS add(): coarse-assign the increment, residual-encode it
     # against the STANDING PQ codebooks — the index never refits
     inc_resid = _ivfadc_residuals(
-        _assign_to_codebook(incr, _with_cnorm(cent)), cent
+        _assign_to_codebook(valid_embeddings(e).where(is_new), _with_cnorm(cent)),
+        cent,
     )
     combined = codes_s.unionByName(_ivfadc_codes(inc_resid, pcent))
-    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    hits = ivfadc_probe_hits(cent, pcent, combined, e, q, ANN_K)
-    marked = _mark_exact_topk(hits, e, q, ANN_K, metric="l2")
-    rec = marked.agg(
-        (
-            F.sum(F.col("in_exact_topk").cast("long")).cast("double")
-            / F.lit(float(ANN_K))
-        ).alias("recall_at_k")
-    )
-    return (
-        marked.crossJoin(F.broadcast(rec))
-        # is_new is a pure function of vec_id (the hash carve), so it
-        # marks on the OUTPUT — no flag threads through the serve
-        .withColumn("is_new", ~(_standing_key() < F.lit(hex_b)))
-        .withColumn("recall_ok", F.col("recall_at_k") >= Q211_RECALL_TARGET)
-        .select(
-            "vec_id", "cluster", "is_new", "approx_dist", "dist",
-            "in_exact_topk", "recall_at_k", "recall_ok",
-        )
-        .orderBy(F.col("dist").asc(), "vec_id")
+    # is_new is a pure function of vec_id (the hash carve), so it marks
+    # on the OUTPUT — no flag threads through the serve
+    return _ivfadc_serve(e, cent, pcent, combined, Q211_RECALL_TARGET).select(
+        "vec_id", "cluster", is_new.alias("is_new"), "approx_dist", "dist",
+        "in_exact_topk", "recall_at_k", "recall_ok",
     )
 
 
@@ -4156,6 +4136,25 @@ def q212_ivfadc_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q211 freshness lifecycle)."""
     _cent_s, pcent_s, codes_s = ivfadc_standing_index_for(spark, sf_dir)
     _cent_r, pcent_r, codes_r = ivfadc_index_for(spark, sf_dir)
+    return _pq_codebook_drift(
+        pcent_s, codes_s, pcent_r, codes_r, Q212_CODE_CHURN_TAU
+    )
+
+
+def _pq_codebook_drift(
+    pcent_s: DataFrame,
+    codes_s: DataFrame,
+    pcent_r: DataFrame,
+    codes_r: DataFrame,
+    tau: float,
+) -> DataFrame:
+    """The per-subspace codebook-drift audit shared by q212 (IVFADC's
+    residual codebooks) and q215 (flat PQ): align the standing
+    codebooks ``pcent_s`` to the refit candidate ``pcent_r`` by
+    nearest L2 per subspace, count how often a standing code would
+    change under the refit (``codes_s`` vs ``codes_r``, refit codewords
+    mapped back through the alignment), and flag the retrain at churn
+    ≥ ``tau``. One row per (sub, standing codeword)."""
     sp = pcent_s.select(
         "sub", F.col("cid").alias("s_cid"), F.col("cv").alias("s_cv")
     )
@@ -4184,12 +4183,13 @@ def q212_ivfadc_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange volume drops N_SUB× and the broadcast-map join
     # disappears. Arithmetic identical to the oracle's (vec_id, sub)
     # replay: sum over subs of mismatches / (rows × N_SUB).
-    # ONE global aggregation (the _pq_cells_row note): the alignment
-    # map is dense N_SUB x K_PQ by construction, so the (sub, r_cid)-
-    # sorted flat list re-nests by slicing in-row on the single row
+    # ONE global aggregation (the _pq_cells_row note); _renest checks
+    # the (sub, r_cid) grid is dense before slicing it
     mrow = map_r.agg(
         F.sort_array(
-            F.collect_list(F.struct("sub", "r_cid", "mapped_s"))
+            F.collect_list(
+                F.struct("sub", F.col("r_cid").alias("cid"), "mapped_s")
+            )
         ).alias("_f")
     ).select(F.expr(_renest("_f", "f.mapped_s")).alias("_map"))
     sc = codes_s.select("vec_id", F.col("codes").alias("s_codes"))
@@ -4226,70 +4226,12 @@ def q212_ivfadc_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("_mind"), 6).alias("centroid_shift"),
         )
         .crossJoin(F.broadcast(churn))
-        .withColumn(
-            "retrain_recommended",
-            F.col("code_churn_frac") >= Q212_CODE_CHURN_TAU,
-        )
+        .withColumn("retrain_recommended", F.col("code_churn_frac") >= tau)
         .orderBy("sub", "cid")
     )
 
 
 # --- q213: the retrain — q212's alarm gets its act ---------------------------
-
-
-def ivfadc_standing_refresh(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> None:
-    """The RETRAIN job q212's ``retrain_recommended`` calls for: refit
-    the coarse codebook, the residual PQ codebooks, AND the codes over
-    the FULL current corpus (standing ∪ increments), persist in the
-    fifteenth family's exact layout, and stamp the moved boundary
-    :data:`IVF_REFRESHED_HEX` — everything standing, zero pending
-    increments. Because ``standing_hex`` is a MUTABLE family param and
-    the serve path carves at the artifact's stamped boundary
-    (:func:`ivfadc_standing_hex`), the refreshed index attaches and
-    serves through the ordinary lifecycle with no code change —
-    q207's rotation discipline applied to the production index.
-
-    Cost: one coarse k-means + one assignment pass + the
-    sample-bounded residual PQ fit + one codes pass — the full
-    retrain price the alarm deliberately gates."""
-    import os
-
-    from ._util import write_index_meta
-
-    e = valid_embeddings(tw(spark, sf_dir, "embeddings"))
-    cent = ivf_codebook(e)
-    resid = _ivfadc_residuals(
-        _assign_to_codebook(e, _with_cnorm(cent)), cent
-    ).localCheckpoint(eager=True)
-    pcent = pq_codebooks(resid.select("vec_id", "embedding"))
-    # ONE clustering shuffle, straight into the partitioned write
-    # (r18): rebalance-by-cluster gives the partitionBy save one file
-    # set per cell with AQE splitting any skewed cell, and the wide
-    # encode output is written without the r17 checkpoint
-    # materialize-then-rescan (the write is its only consumer)
-    codes = _ivfadc_codes(resid, pcent).hint("rebalance", "cluster")
-    cent.write.mode("overwrite").parquet(os.path.join(out_dir, "coarse"))
-    pcent.write.mode("overwrite").parquet(os.path.join(out_dir, "pq"))
-    codes.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(out_dir, "codes")
-    )
-    write_index_meta(
-        out_dir,
-        os.path.join(sf_dir, "embeddings.parquet"),
-        schemas={
-            "coarse": cent.schema.json(),
-            "pq": pcent.schema.json(),
-            "codes": codes.schema.json(),
-        },
-        params={
-            "standing_hex": IVF_REFRESHED_HEX,
-            "k_coarse": N_IVF_CENTROIDS,
-            "n_sub": N_SUB,
-            "k_pq": K_PQ,
-        },
-    )
 
 
 @register(
@@ -4301,8 +4243,9 @@ def ivfadc_standing_refresh(
 def q213_ivfadc_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REFRESH-THEN-SERVE for the production index — closes q212's
     alarm → act loop (the q188/q207 pattern applied to the fifteenth
-    family): run :func:`ivfadc_standing_refresh` (full-corpus refit
-    of coarse + PQ + codes stamped at the moved boundary), ATTACH the
+    family): run :func:`ivfadc_standing_index_refresh` (the standing
+    fit at the moved boundary — a full-corpus refit of coarse + PQ +
+    codes — stamped with it), ATTACH the
     refreshed artifact through the ordinary fingerprint+param gate
     (``standing_hex`` is mutable; a doctored ``k_pq``/``n_sub`` or a
     stale fingerprint still refuses), and serve q211's view from it.
@@ -4317,20 +4260,17 @@ def q213_ivfadc_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     never poison a later q211/q212 call whose oracle models the STALE
     boundary.
 
-    Scale shape: the refresh is the one-shot retrain the alarm gates;
+    Scale shape: the refresh is the one-shot retrain the alarm gates
+    (one coarse k-means + one assignment pass + the sample-bounded
+    residual PQ fit + one codes pass, written straight from the plan);
     the attach+serve after it is q160's ordinary probed-cell ADC cost
     with an EMPTY increment encode.
 
     Reference analog: none (SURVEY §2.3 maintenance block — the
     retrain half of the production-index lifecycle)."""
-    from ._util import refresh_then_serve
-
     return refresh_then_serve(
-        spark, sf_dir,
-        cache_family="ivfadc_standing",
-        src_table="embeddings.parquet",
-        refresh_fn=ivfadc_standing_refresh,
-        attach_fn=ivfadc_standing_index_attach,
+        spark, sf_dir, ivfadc_standing_family,
+        refresh_fn=ivfadc_standing_index_refresh,
         serve_fn=_serve_ivfadc_incr_view,
     )
 
@@ -4356,66 +4296,43 @@ def q213_ivfadc_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q214_RECALL_TARGET = 0.6
 
 
-def pq_standing_hex(artifact: DataFrame) -> str:
-    """The increment-carve boundary is a property of the ATTACHED
-    artifact (:func:`ivf_standing_hex` applied to this family): read
-    it from the ``_mms_fit_params`` tag so a refreshed index (boundary
-    moved to :data:`IVF_REFRESHED_HEX`) serves through the SAME q214
-    path with a provably empty increment."""
-    return getattr(artifact, "_mms_fit_params", {}).get(
-        "standing_hex", Q175_STANDING_HEX
-    )
-
-
 def _pq_standing_fit(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, hex_b: str
 ) -> tuple[DataFrame, DataFrame]:
     """The STANDING-corpus flat-PQ fit: (codebooks, codes) with the
     per-subspace codebooks fitted on — and the codes covering — only
-    the standing hash split. Same gate (valid_embeddings), same
-    sample-bounded Lloyd, same encode pass as the full-corpus family
-    (:func:`_pq_fit`) — only the fit population differs."""
-    e = valid_embeddings(t(spark, sf_dir, "embeddings"))
-    standing = e.where(_standing_key() < Q175_STANDING_HEX)
-    cent = pq_codebooks(standing)
-    sw = valid_embeddings(tw(spark, sf_dir, "embeddings")).where(
-        _standing_key() < Q175_STANDING_HEX
-    )
-    # REBALANCE before materializing — the _pq_fit note
-    codes = (
-        _pq_encode(sw, cent)
-        .hint("rebalance")
-        .localCheckpoint(eager=True)
-    )
-    return (cent, codes)
+    the valid vectors below ``hex_b``. Same gate (valid_embeddings),
+    same sample-bounded Lloyd, same encode pass as the full-corpus
+    family (:func:`_pq_fit`) — only the fit population differs."""
+    def standing(e: DataFrame) -> DataFrame:
+        return valid_embeddings(e).where(_standing_key() < hex_b)
+
+    cent = pq_codebooks(standing(t(spark, sf_dir, "embeddings")))
+    # REBALANCE — the _pq_fit note: AQE sizes the codes, pinned or written
+    codes = _pq_encode(standing(tw(spark, sf_dir, "embeddings")), cent)
+    return (cent, codes.hint("rebalance"))
 
 
-# Standing-corpus flat-PQ lifecycle via fitted_family — the SIXTEENTH
-# persisted family. Same layout as the full-corpus PQ index (codes
-# deliberately unpartitioned: flat ADC scans every code, there is no
-# probe predicate to prune on); the standing boundary rides the param
-# stamp as a MUTABLE param (the refresh lifecycle moves it), while
-# n_sub/k_pq stay immutable contracts.
-(
-    pq_standing_index_for,
-    pq_standing_index_save,
-    pq_standing_index_load,
-    pq_standing_index_attach,
-) = fitted_family(
+# Standing-corpus flat-PQ lifecycle — the SIXTEENTH persisted family.
+# Same layout as the full-corpus PQ index (codes deliberately
+# unpartitioned: flat ADC scans every code, there is no probe
+# predicate to prune on); n_sub/k_pq are the immutable contracts.
+pq_standing_family, pq_standing_index_refresh = _standing_family(
     "pq_standing",
-    "embeddings.parquet",
     [
         ("pq", ["sub", "cid", "cv"], None),
         ("codes", ["vec_id", "codes"], None),
     ],
     _pq_standing_fit,
-    params={
-        "standing_hex": Q175_STANDING_HEX,
-        "n_sub": N_SUB,
-        "k_pq": K_PQ,
-    },
-    mutable=("standing_hex",),
+    n_sub=N_SUB,
+    k_pq=K_PQ,
 )
+(
+    pq_standing_index_for,
+    pq_standing_index_save,
+    pq_standing_index_load,
+    pq_standing_index_attach,
+) = pq_standing_family
 
 
 def _q214_oracle(standing_pred: str | None = None) -> str:
@@ -4541,73 +4458,22 @@ def _serve_pq_incr_view(
 ) -> DataFrame:
     """Serve q214's view from a standing (cent, codes) artifact:
     PQ-encode the increment carve against the broadcast codebooks,
-    union into the codes, run q157's serving chain, mark is_new + the
-    recall audit. The increment boundary is the ARTIFACT's stamped one
-    (:func:`pq_standing_hex`), so a refreshed index (q216) serves an
+    union into the codes, run q157's serve chain (:func:`_pq_serve`),
+    mark is_new. The increment boundary is the ARTIFACT's stamped one
+    (:func:`standing_hex`), so a refreshed index (q216) serves an
     empty increment through this same path — shared by q214 and
     q216."""
     cent, codes_s = art
     e = t(spark, sf_dir, "embeddings")
-    hex_b = pq_standing_hex(cent)
-    incr = valid_embeddings(e).where(~(_standing_key() < F.lit(hex_b)))
-    combined = codes_s.unionByName(_pq_encode(incr, cent))
-    # one LUT row for the pinned query, one in-row sum per candidate
-    # code row — no groupBy(vec_id) exchange (r18 wide codes; the
-    # q157 serve shape)
-    qlut = (
-        e.where(F.col("vec_id") == QUERY_VEC_ID)
-        .crossJoin(F.broadcast(_pq_cells_row(cent)))
-        .select(_pq_lut_expr(_chunked("embedding")).alias("_qlut"))
+    is_new = ~(_standing_key() < F.lit(standing_hex(cent)))
+    combined = codes_s.unionByName(
+        _pq_encode(valid_embeddings(e).where(is_new), cent)
     )
-    scored = (
-        combined.where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(qlut))
-        .select(
-            "vec_id",
-            _adc_dist("codes", "_qlut").alias("approx_dist"),
-        )
-    )
-    shortlist = scored.orderBy(F.col("approx_dist").asc(), "vec_id").limit(
-        PQ_SHORTLIST
-    )
-    qfull = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.expr(_dbl("embedding")).alias("qv")
-    )
-    ed = F.expr(_l2(_dbl("embedding"), "qv"))
-    rerank = (
-        shortlist.join(e, "vec_id")
-        .crossJoin(F.broadcast(qfull))
-        .select("vec_id", "approx_dist", F.round(ed, 6).alias("dist"))
-    )
-    hits = rerank.orderBy(F.col("dist").asc(), "vec_id").limit(ANN_K)
-    exact = (
-        e.where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(qfull))
-        .select("vec_id", ed.alias("_ed"))
-        .orderBy(F.col("_ed").asc_nulls_last(), "vec_id")
-        .limit(ANN_K)
-        .select("vec_id", F.lit(True).alias("in_exact_topk"))
-    )
-    marked = hits.join(F.broadcast(exact), "vec_id", "left").withColumn(
-        "in_exact_topk", F.coalesce("in_exact_topk", F.lit(False))
-    )
-    rec = marked.agg(
-        (
-            F.sum(F.col("in_exact_topk").cast("long")).cast("double")
-            / F.lit(float(ANN_K))
-        ).alias("recall_at_k")
-    )
-    return (
-        marked.crossJoin(F.broadcast(rec))
-        # is_new is a pure function of vec_id (the hash carve), so it
-        # marks on the OUTPUT — no flag threads through the serve
-        .withColumn("is_new", ~(_standing_key() < F.lit(hex_b)))
-        .withColumn("recall_ok", F.col("recall_at_k") >= Q214_RECALL_TARGET)
-        .select(
-            "vec_id", "is_new", "approx_dist", "dist", "in_exact_topk",
-            "recall_at_k", "recall_ok",
-        )
-        .orderBy(F.col("dist").asc(), "vec_id")
+    # is_new is a pure function of vec_id (the hash carve), so it marks
+    # on the OUTPUT — no flag threads through the serve
+    return _pq_serve(e, cent, combined, Q214_RECALL_TARGET).select(
+        "vec_id", is_new.alias("is_new"), "approx_dist", "dist",
+        "in_exact_topk", "recall_at_k", "recall_ok",
     )
 
 
@@ -4747,123 +4613,12 @@ def q215_pq_codebook_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q214 freshness lifecycle)."""
     cent_s, codes_s = pq_standing_index_for(spark, sf_dir)
     cent_r, codes_r = pq_index_for(spark, sf_dir)
-    sp = cent_s.select(
-        "sub", F.col("cid").alias("s_cid"), F.col("cv").alias("s_cv")
-    )
-    rp = cent_r.select(
-        "sub", F.col("cid").alias("r_cid"), F.col("cv").alias("r_cv")
-    )
-    pairs = sp.join(F.broadcast(rp), "sub").select(
-        "sub", "s_cid", "r_cid",
-        F.expr(_l2("s_cv", "r_cv")).alias("d"),
-    )
-    near_s = pairs.groupBy("sub", "s_cid").agg(
-        F.min_by("r_cid", F.struct(F.col("d"), F.col("r_cid"))).alias(
-            "nearest_refit_cid"
-        ),
-        F.min("d").alias("_mind"),
-    )
-    map_r = pairs.groupBy("sub", "r_cid").agg(
-        F.min_by("s_cid", F.struct(F.col("d"), F.col("s_cid"))).alias(
-            "mapped_s"
-        )
-    )
-    # wide-codes churn — the q212 rewrite verbatim (r18): one vec_id
-    # join, in-row alignment map, N_SUB× less exchange volume
-    # ONE global aggregation (the _pq_cells_row note): the alignment
-    # map is dense N_SUB x K_PQ by construction, so the (sub, r_cid)-
-    # sorted flat list re-nests by slicing in-row on the single row
-    mrow = map_r.agg(
-        F.sort_array(
-            F.collect_list(F.struct("sub", "r_cid", "mapped_s"))
-        ).alias("_f")
-    ).select(F.expr(_renest("_f", "f.mapped_s")).alias("_map"))
-    sc = codes_s.select("vec_id", F.col("codes").alias("s_codes"))
-    rc = codes_r.select("vec_id", F.col("codes").alias("r_codes"))
-    mism = F.expr(_CODE_MISMATCHES)
-    churn = (
-        sc.join(rc, "vec_id")
-        .crossJoin(F.broadcast(mrow))
-        .agg(
-            F.round(
-                F.sum(mism).cast("double")
-                / (F.count(F.lit(1)) * F.lit(N_SUB)),
-                4,
-            ).alias("code_churn_frac")
-        )
-    )
-    pop = (
-        codes_s.select(F.posexplode("codes").alias("sub", "p_code"))
-        .groupBy("sub", F.col("p_code").alias("p_cid"))
-        .agg(F.count(F.lit(1)).alias("n_codes"))
-    )
-    return (
-        near_s.join(
-            pop,
-            (near_s.sub == pop.sub) & (near_s.s_cid == pop.p_cid),
-            "left",
-        )
-        .select(
-            # the oracle's range(N_SUB) is BIGINT; posexplode yields INT
-            near_s.sub.cast("long").alias("sub"),
-            F.col("s_cid").alias("cid"),
-            F.coalesce("n_codes", F.lit(0)).cast("long").alias("n_codes"),
-            "nearest_refit_cid",
-            F.round(F.col("_mind"), 6).alias("centroid_shift"),
-        )
-        .crossJoin(F.broadcast(churn))
-        .withColumn(
-            "retrain_recommended",
-            F.col("code_churn_frac") >= Q215_CODE_CHURN_TAU,
-        )
-        .orderBy("sub", "cid")
+    return _pq_codebook_drift(
+        cent_s, codes_s, cent_r, codes_r, Q215_CODE_CHURN_TAU
     )
 
 
 # --- q216: the retrain — q215's alarm gets its act ---------------------------
-
-
-def pq_standing_refresh(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> None:
-    """The RETRAIN job q215's ``retrain_recommended`` calls for: refit
-    the per-subspace codebooks AND the codes over the FULL current
-    corpus (standing ∪ increments), persist in the sixteenth family's
-    exact layout, and stamp the moved boundary
-    :data:`IVF_REFRESHED_HEX` — everything standing, zero pending
-    increments. Because ``standing_hex`` is a MUTABLE family param and
-    the serve path carves at the artifact's stamped boundary
-    (:func:`pq_standing_hex`), the refreshed index attaches and serves
-    through the ordinary lifecycle with no code change — q207's
-    rotation discipline applied to the flat-PQ index.
-
-    Cost: one sample-bounded Lloyd + one encode pass over the corpus
-    — the retrain price the alarm deliberately gates (and the cheapest
-    of the index retrains: no coarse k-means, no residual pass)."""
-    import os
-
-    from ._util import write_index_meta
-
-    e = valid_embeddings(t(spark, sf_dir, "embeddings"))
-    cent = pq_codebooks(e)
-    # REBALANCE straight into the write (r18): AQE sizes the output
-    # files; no checkpoint materialize-then-rescan (the write is the
-    # plan's only consumer)
-    codes = _pq_encode(
-        valid_embeddings(tw(spark, sf_dir, "embeddings")), cent
-    ).hint("rebalance")
-    cent.write.mode("overwrite").parquet(os.path.join(out_dir, "pq"))
-    codes.write.mode("overwrite").parquet(os.path.join(out_dir, "codes"))
-    write_index_meta(
-        out_dir,
-        os.path.join(sf_dir, "embeddings.parquet"),
-        schemas={"pq": cent.schema.json(), "codes": codes.schema.json()},
-        params={
-            "standing_hex": IVF_REFRESHED_HEX,
-            "n_sub": N_SUB,
-            "k_pq": K_PQ,
-        },
-    )
 
 
 @register(
@@ -4875,8 +4630,9 @@ def pq_standing_refresh(
 def q216_pq_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REFRESH-THEN-SERVE for the flat-PQ index — closes q215's alarm
     → act loop (the q188/q207/q213 pattern applied to the sixteenth
-    family): run :func:`pq_standing_refresh` (full-corpus refit of
-    codebooks + codes stamped at the moved boundary), ATTACH the
+    family): run :func:`pq_standing_index_refresh` (the standing fit
+    at the moved boundary — a full-corpus refit of codebooks + codes —
+    stamped with it), ATTACH the
     refreshed artifact through the ordinary fingerprint+param gate
     (``standing_hex`` is mutable; a doctored ``k_pq``/``n_sub`` or a
     stale fingerprint still refuses), and serve q214's view from it.
@@ -4891,19 +4647,16 @@ def q216_pq_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     never poison a later q214/q215 call whose oracle models the STALE
     boundary.
 
-    Scale shape: the refresh is the one-shot retrain the alarm gates;
-    the attach+serve after it is q157's ordinary codes-only ADC cost
-    with an EMPTY increment encode.
+    Scale shape: the refresh is the one-shot retrain the alarm gates
+    (one sample-bounded Lloyd + one encode pass over the corpus, the
+    cheapest of the index retrains); the attach+serve after it is
+    q157's ordinary codes-only ADC cost with an EMPTY increment
+    encode.
 
     Reference analog: none (SURVEY §2.3 maintenance block — the
     retrain half of the flat-PQ lifecycle)."""
-    from ._util import refresh_then_serve
-
     return refresh_then_serve(
-        spark, sf_dir,
-        cache_family="pq_standing",
-        src_table="embeddings.parquet",
-        refresh_fn=pq_standing_refresh,
-        attach_fn=pq_standing_index_attach,
+        spark, sf_dir, pq_standing_family,
+        refresh_fn=pq_standing_index_refresh,
         serve_fn=_serve_pq_incr_view,
     )

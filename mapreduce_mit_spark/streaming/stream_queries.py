@@ -1913,11 +1913,11 @@ def _stage_ivf_lists_tree(spark: SparkSession, sf_dir: str, sink_key: str) -> st
     rewrites the tree behind the same pointer."""
     import shutil
 
+    from ..plans._util import standing_hex
     from ..plans.similarity import (
         _assign_to_codebook,
         _standing_key,
         _with_cnorm,
-        ivf_standing_hex,
         ivf_standing_index_for,
         valid_embeddings,
     )
@@ -1936,7 +1936,7 @@ def _stage_ivf_lists_tree(spark: SparkSession, sf_dir: str, sink_key: str) -> st
     e = valid_embeddings(load_table(spark, sf_dir, "embeddings"))
     # the standing tier: fitted artifact (or attached — no refit here)
     cent, _slists = ivf_standing_index_for(spark, sf_dir)
-    incr = e.where(~(_standing_key() < ivf_standing_hex(cent))).select(
+    incr = e.where(~(_standing_key() < standing_hex(cent))).select(
         "vec_id", "label", "embedding"
     )
     centn = _with_cnorm(cent).localCheckpoint(eager=True)
@@ -2053,7 +2053,9 @@ def _serve_ivf_ingest_view(
         queries1,
         ANN_K,
     )
-    return _with_recall(marked, ANN_K, Q175_RECALL_TARGET).select(
+    return _with_recall(
+        marked, ANN_K, Q175_RECALL_TARGET, F.col("_sim").desc()
+    ).select(
         "vec_id", "label", "cluster", "is_new",
         F.round("_sim", 4).alias("cos_sim"),
         "in_exact_topk", "recall_at_k", "recall_ok",
@@ -2068,7 +2070,7 @@ def _serve_ivf_ingest_view(
 # ORACLE VALIDITY: the bound SQL carves at the DEFAULT standing
 # boundary (Q175_STANDING_HEX). If a q207-refreshed artifact is
 # ATTACHED in the same session, the engine carves at the artifact's
-# stamped ivf_standing_hex and the value-check would mismatch by
+# stamped standing_hex and the value-check would mismatch by
 # construction — the driver harness always runs in a fresh session
 # (default artifact), and the lifecycle tests that do attach a
 # refreshed artifact restore the session cache before any oracle run.
@@ -2302,11 +2304,11 @@ def _stage_agg_parts_tree(spark: SparkSession, sf_dir: str, sink_key: str) -> st
     rewrites this tree."""
     import shutil
 
+    from ..plans._util import standing_hex
     from ..plans.maintenance import (
         _agg_split_key,
         _lineitem_partials,
         agg_snapshot_for,
-        agg_standing_hex,
     )
     from ..sources.io import ensure_reader_confs, load_table
 
@@ -2320,7 +2322,7 @@ def _stage_agg_parts_tree(spark: SparkSession, sf_dir: str, sink_key: str) -> st
     # carve at the SNAPSHOT's stamped boundary (not the module
     # constant) so the streamed increments and the snapshot the serve
     # merges with can never disagree about where standing ends
-    boundary = agg_standing_hex(agg_snapshot_for(spark, sf_dir))
+    boundary = standing_hex(agg_snapshot_for(spark, sf_dir))
     incr = li.where(~(_agg_split_key() < boundary)).select(
         "l_orderkey", "l_suppkey", "l_quantity", "l_extendedprice",
         "l_discount", "l_shipdate",

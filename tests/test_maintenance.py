@@ -228,7 +228,11 @@ def test_snapshot_refresh_equals_from_scratch(spark, tmp_path):
     through the mutable-param gate, carrying its moved boundary in the
     param tag so the serve path carves an EMPTY increment (the closed
     lifecycle; the old behavior was a refusal dead-end)."""
-    from mapreduce_mit_spark.plans._util import _session_cache, source_fingerprint
+    from mapreduce_mit_spark.plans._util import (
+        _session_cache,
+        source_fingerprint,
+        standing_hex,
+    )
 
     out = str(tmp_path / "refreshed")
     mnt.agg_snapshot_refresh(spark, SF_SMALL, out)
@@ -252,10 +256,10 @@ def test_snapshot_refresh_equals_from_scratch(spark, tmp_path):
     prev = cache.get(key)
     try:
         refreshed = agg_snapshot_attach(spark, SF_SMALL, out)
-        assert mnt.agg_standing_hex(refreshed) == mnt.AGG_REFRESHED_HEX
+        assert standing_hex(refreshed) == mnt.AGG_REFRESHED_HEX
         # the moved boundary makes the increment carve provably empty
         incr = load_table(spark, SF_SMALL, "lineitem").where(
-            ~(mnt._agg_split_key() < mnt.agg_standing_hex(refreshed))
+            ~(mnt._agg_split_key() < standing_hex(refreshed))
         )
         assert incr.count() == 0
     finally:
@@ -469,102 +473,58 @@ def test_incremental_optimize_clears_trigger_and_conserves_rows(spark):
     )
 
 
-def test_ivf_refresh_attach_moved_boundary_and_restores_cache(spark, tmp_path):
-    """q207's lifecycle, pinned beyond the shared oracle: the
-    refreshed index attaches through the mutable-param gate carrying
-    the moved boundary (increment carve provably empty), the gate
-    still refuses a doctored IMMUTABLE param (k), the served rows are
-    all is_new = false, and a later q175 in the same session is
-    untouched (the cache save/restore discipline)."""
-    from mapreduce_mit_spark.plans import similarity as sim
-    from mapreduce_mit_spark.plans._util import _session_cache, source_fingerprint
-    from mapreduce_mit_spark.registry import REGISTRY, load_all_plans
-
-    load_all_plans()
-    q175_before = sorted(
-        map(tuple, REGISTRY["q175_ivf_incremental_serve"].fn(spark, SF_SMALL).collect())
-    )
-    out = str(tmp_path / "ivf_refreshed")
-    sim.ivf_standing_refresh(spark, SF_SMALL, out)
-
-    key = ("ivf_standing",) + source_fingerprint(
-        os.path.join(SF_SMALL, "embeddings.parquet")
-    )
-    cache = _session_cache(spark)
-    prev = cache.get(key)
-    try:
-        cent, _slists = sim.ivf_standing_index_attach(spark, SF_SMALL, out)
-        assert sim.ivf_standing_hex(cent) == sim.IVF_REFRESHED_HEX
-        incr = sim.valid_embeddings(
-            load_table(spark, SF_SMALL, "embeddings")
-        ).where(~(sim._standing_key() < sim.ivf_standing_hex(cent)))
-        assert incr.count() == 0, "refreshed boundary must empty the increment"
-    finally:
-        if prev is not None:
-            cache[key] = prev
-        else:
-            cache.pop(key, None)
-
-    served = REGISTRY["q207_ivf_refresh_serve"].fn(spark, SF_SMALL).collect()
-    assert served and all(not r.is_new for r in served)
-    q175_after = sorted(
-        map(tuple, REGISTRY["q175_ivf_incremental_serve"].fn(spark, SF_SMALL).collect())
-    )
-    assert q175_after == q175_before, "q207 poisoned the session cache"
-
-    # the gate still refuses what remains IMMUTABLE: a doctored k
-    meta_path = os.path.join(out, "_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    doctored = dict(meta, params=dict(meta["params"], k=99))
-    with open(meta_path, "w") as f:
-        json.dump(doctored, f)
-    with pytest.raises(ValueError, match="params"):
-        sim.ivf_standing_index_attach(spark, SF_SMALL, out)
+# the three standing ANN lifecycles: the refresh act, the incremental
+# serve whose view it must leave untouched, and an immutable param
+_STANDING_LIFECYCLES = {
+    "ivf": ("q207_ivf_refresh_serve", "q175_ivf_incremental_serve", "k"),
+    "ivfadc": (
+        "q213_ivfadc_refresh_serve", "q211_ivfadc_incremental_serve", "k_pq",
+    ),
+    "pq": ("q216_pq_refresh_serve", "q214_pq_incremental_serve", "k_pq"),
+}
 
 
-def test_ivfadc_refresh_attach_moved_boundary_and_restores_cache(
-    spark, tmp_path
+@pytest.mark.parametrize("kind", sorted(_STANDING_LIFECYCLES))
+def test_standing_refresh_attach_moved_boundary_and_restores_cache(
+    spark, tmp_path, kind
 ):
-    """q213's lifecycle, pinned beyond the shared oracle (the q207
-    test applied to the fifteenth family): the refreshed IVFADC
-    artifact attaches through the mutable-param gate carrying the
-    moved boundary (increment carve provably empty), the gate still
-    refuses a doctored IMMUTABLE param (k_pq), the served rows are
-    all is_new = false, and a later q211 in the same session is
-    untouched (the cache save/restore discipline)."""
+    """q207/q213/q216's lifecycle, pinned beyond the shared oracles, for
+    each standing ANN family: the refreshed artifact attaches through
+    the mutable-param gate carrying the moved boundary (increment carve
+    provably empty), the served rows are all is_new = false, a later
+    incremental serve in the same session is untouched (the cache
+    save/restore discipline), and the gate still refuses a doctored
+    IMMUTABLE param."""
     from mapreduce_mit_spark.plans import similarity as sim
     from mapreduce_mit_spark.plans._util import (
         _session_cache,
         source_fingerprint,
+        standing_hex,
     )
     from mapreduce_mit_spark.registry import REGISTRY, load_all_plans
 
+    act, view, immutable = _STANDING_LIFECYCLES[kind]
+    family = getattr(sim, f"{kind}_standing_family")
     load_all_plans()
-    q211_before = sorted(
-        map(
-            tuple,
-            REGISTRY["q211_ivfadc_incremental_serve"]
-            .fn(spark, SF_SMALL)
-            .collect(),
-        )
-    )
-    out = str(tmp_path / "ivfadc_refreshed")
-    sim.ivfadc_standing_refresh(spark, SF_SMALL, out)
 
-    key = ("ivfadc_standing",) + source_fingerprint(
-        os.path.join(SF_SMALL, "embeddings.parquet")
+    def served(name):
+        return sorted(map(tuple, REGISTRY[name].fn(spark, SF_SMALL).collect()))
+
+    before = served(view)
+    out = str(tmp_path / f"{kind}_refreshed")
+    getattr(sim, f"{kind}_standing_index_refresh")(spark, SF_SMALL, out)
+
+    key = (family.kind,) + source_fingerprint(
+        os.path.join(SF_SMALL, family.source)
     )
     cache = _session_cache(spark)
     prev = cache.get(key)
     try:
-        cent, _pcent, _codes = sim.ivfadc_standing_index_attach(
-            spark, SF_SMALL, out
-        )
-        assert sim.ivfadc_standing_hex(cent) == sim.IVF_REFRESHED_HEX
+        cent = family.attach(spark, SF_SMALL, out)[0]
+        assert standing_hex(cent) == sim.IVF_REFRESHED_HEX
         incr = sim.valid_embeddings(
             load_table(spark, SF_SMALL, "embeddings")
-        ).where(~(sim._standing_key() < sim.ivfadc_standing_hex(cent)))
+        ).where(~(sim._standing_key() < standing_hex(cent)))
         assert incr.count() == 0, "refreshed boundary must empty the increment"
     finally:
         if prev is not None:
@@ -572,94 +532,71 @@ def test_ivfadc_refresh_attach_moved_boundary_and_restores_cache(
         else:
             cache.pop(key, None)
 
-    served = REGISTRY["q213_ivfadc_refresh_serve"].fn(spark, SF_SMALL).collect()
-    assert served and all(not r.is_new for r in served)
-    q211_after = sorted(
-        map(
-            tuple,
-            REGISTRY["q211_ivfadc_incremental_serve"]
-            .fn(spark, SF_SMALL)
-            .collect(),
-        )
-    )
-    assert q211_after == q211_before, "q213 poisoned the session cache"
+    rows = REGISTRY[act].fn(spark, SF_SMALL).collect()
+    assert rows and all(not r.is_new for r in rows)
+    assert served(view) == before, f"{act} poisoned the session cache"
 
-    # the gate still refuses what remains IMMUTABLE: a doctored k_pq
+    # the gate still refuses what remains IMMUTABLE
     meta_path = os.path.join(out, "_meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
-    doctored = dict(meta, params=dict(meta["params"], k_pq=99))
+    doctored = dict(meta, params=dict(meta["params"], **{immutable: 99}))
     with open(meta_path, "w") as f:
         json.dump(doctored, f)
     with pytest.raises(ValueError, match="params"):
-        sim.ivfadc_standing_index_attach(spark, SF_SMALL, out)
+        family.attach(spark, SF_SMALL, out)
 
 
-def test_pq_refresh_attach_moved_boundary_and_restores_cache(
-    spark, tmp_path
-):
-    """q216's lifecycle, pinned beyond the shared oracle (the
-    q207/q213 test applied to the sixteenth family): the refreshed
-    flat-PQ artifact attaches through the mutable-param gate carrying
-    the moved boundary (increment carve provably empty), the gate
-    still refuses a doctored IMMUTABLE param (k_pq), the served rows
-    are all is_new = false, and a later q214 in the same session is
-    untouched (the cache save/restore discipline)."""
+@pytest.mark.parametrize("kind", sorted(_STANDING_LIFECYCLES))
+def test_standing_refresh_writes_the_save_layout(spark, tmp_path, kind):
+    """A refresh is the standing fit at the moved boundary, written by
+    the family's one writer, so it lays out exactly what ``save`` lays
+    out: the same sub-tables, partition columns, fitted schemas and
+    param keys, with only ``standing_hex`` different. The writer
+    refuses to move a param that is not mutable."""
     from mapreduce_mit_spark.plans import similarity as sim
-    from mapreduce_mit_spark.plans._util import (
-        _session_cache,
-        source_fingerprint,
-    )
-    from mapreduce_mit_spark.registry import REGISTRY, load_all_plans
 
-    load_all_plans()
-    q214_before = sorted(
-        map(
-            tuple,
-            REGISTRY["q214_pq_incremental_serve"]
-            .fn(spark, SF_SMALL)
-            .collect(),
+    _act, _view, immutable = _STANDING_LIFECYCLES[kind]
+    family = getattr(sim, f"{kind}_standing_family")
+    saved, refreshed = str(tmp_path / "saved"), str(tmp_path / "refreshed")
+    family.save(spark, SF_SMALL, saved)
+    getattr(sim, f"{kind}_standing_index_refresh")(spark, SF_SMALL, refreshed)
+
+    def layout(out):
+        with open(os.path.join(out, "_meta.json")) as f:
+            meta = json.load(f)
+        tables = {
+            name: {d.split("=")[0] for d in os.listdir(os.path.join(out, name))
+                   if "=" in d}
+            for name in os.listdir(out)
+            if os.path.isdir(os.path.join(out, name))
+        }
+        return tables, meta["schemas"], meta["params"]
+
+    tables_s, schemas_s, params_s = layout(saved)
+    tables_r, schemas_r, params_r = layout(refreshed)
+    assert tables_r == tables_s and schemas_r == schemas_s
+    assert params_s.pop("standing_hex") == sim.Q175_STANDING_HEX
+    assert params_r.pop("standing_hex") == sim.IVF_REFRESHED_HEX
+    assert params_r == params_s
+    with pytest.raises(ValueError, match="not mutable"):
+        family.write(
+            SF_SMALL, str(tmp_path / "doctored"), family.for_(spark, SF_SMALL),
+            **{immutable: 99},
         )
-    )
-    out = str(tmp_path / "pq_refreshed")
-    sim.pq_standing_refresh(spark, SF_SMALL, out)
+    assert not os.path.exists(tmp_path / "doctored")
 
-    key = ("pq_standing",) + source_fingerprint(
-        os.path.join(SF_SMALL, "embeddings.parquet")
-    )
-    cache = _session_cache(spark)
-    prev = cache.get(key)
-    try:
-        cent, _codes = sim.pq_standing_index_attach(spark, SF_SMALL, out)
-        assert sim.pq_standing_hex(cent) == sim.IVF_REFRESHED_HEX
-        incr = sim.valid_embeddings(
-            load_table(spark, SF_SMALL, "embeddings")
-        ).where(~(sim._standing_key() < sim.pq_standing_hex(cent)))
-        assert incr.count() == 0, "refreshed boundary must empty the increment"
-    finally:
-        if prev is not None:
-            cache[key] = prev
-        else:
-            cache.pop(key, None)
 
-    served = REGISTRY["q216_pq_refresh_serve"].fn(spark, SF_SMALL).collect()
-    assert served and all(not r.is_new for r in served)
-    q214_after = sorted(
-        map(
-            tuple,
-            REGISTRY["q214_pq_incremental_serve"]
-            .fn(spark, SF_SMALL)
-            .collect(),
-        )
-    )
-    assert q214_after == q214_before, "q216 poisoned the session cache"
+def test_standing_hex_refuses_an_untagged_frame(spark):
+    """The increment boundary is read from the artifact's param tag; a
+    frame without one (derived from the artifact, or never fitted)
+    must raise rather than carve at a default boundary."""
+    from mapreduce_mit_spark.plans import similarity as sim
+    from mapreduce_mit_spark.plans._util import standing_hex
 
-    # the gate still refuses what remains IMMUTABLE: a doctored k_pq
-    meta_path = os.path.join(out, "_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    doctored = dict(meta, params=dict(meta["params"], k_pq=99))
-    with open(meta_path, "w") as f:
-        json.dump(doctored, f)
-    with pytest.raises(ValueError, match="params"):
-        sim.pq_standing_index_attach(spark, SF_SMALL, out)
+    cent, _lists = sim.ivf_standing_index_for(spark, SF_SMALL)
+    assert standing_hex(cent) == sim.Q175_STANDING_HEX
+    with pytest.raises(ValueError, match="standing_hex"):
+        standing_hex(cent.select("cid", "cv"))
+    with pytest.raises(ValueError, match="standing_hex"):
+        standing_hex(spark.range(1))

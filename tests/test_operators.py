@@ -2797,6 +2797,37 @@ def test_pq_standing_index_save_load_roundtrip(spark, tmp_path):
     assert mem == disk and mem
 
 
+def test_pq_cells_row_refuses_a_broken_grid(spark):
+    """``_renest`` slices a (sub, cid)-sorted flat list by position, so
+    it is right only on a dense N_SUB × K_PQ grid. A codebook with one
+    (sub, cid) dropped and another duplicated keeps the entry count but
+    shifts every entry after the gap; it must fail loudly at the first
+    offending position, not mislabel every code after it. A dropped row
+    alone must fail on the count."""
+    from mapreduce_mit_spark.plans.similarity import (
+        K_PQ,
+        N_SUB,
+        SUB_DIM,
+        _pq_cells_row,
+    )
+
+    schema = "sub int, cid long, cv array<double>"
+    rows = [
+        (s, c, [float(s * K_PQ + c)] * SUB_DIM)
+        for s in range(N_SUB)
+        for c in range(K_PQ)
+    ]
+    cells = _pq_cells_row(spark.createDataFrame(rows, schema)).first()[0]
+    assert [[c.cid for c in sub] for sub in cells] == [list(range(K_PQ))] * N_SUB
+
+    gap = K_PQ + 8  # (1, 8) dropped; (3, 4) duplicated
+    shifted = rows[:gap] + rows[gap + 1:] + [rows[3 * K_PQ + 4]]
+    with pytest.raises(Exception, match=f"PQ grid entry {gap} is"):
+        _pq_cells_row(spark.createDataFrame(shifted, schema)).collect()
+    with pytest.raises(Exception, match=f"PQ grid has {N_SUB * K_PQ - 1} entries"):
+        _pq_cells_row(spark.createDataFrame(rows[:-1], schema)).collect()
+
+
 def test_pq_codebook_drift_semantics(spark):
     """q215's structural claims beyond the shared oracle: one row per
     (subspace, standing codeword); churn_frac is one global value in

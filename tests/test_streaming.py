@@ -1365,7 +1365,7 @@ def test_q176_streams_empty_ingest_under_refreshed_artifact(spark, tmp_path):
 
     load_all_plans()
     out = str(tmp_path / "ivf_refreshed")
-    sim.ivf_standing_refresh(spark, SF_SMALL, out)
+    sim.ivf_standing_index_refresh(spark, SF_SMALL, out)
     key = ("ivf_standing",) + source_fingerprint(
         os.path.join(SF_SMALL, "embeddings.parquet")
     )
